@@ -374,9 +374,12 @@ class Graph:
                                 for f in df.schema.fields
                             ]
                         )
+                    # No checkpoint needed: the rewrite reads out_path
+                    # and writes tmp_path, so the read and write paths
+                    # never overlap, and the dirs swap by rename below.
                     df = latest_by_key(
                         prev.unionByName(df), list(spec.unique_on), order
-                    ).localCheckpoint()
+                    )
                     tmp_path = out_path + ".__tmp__"
                     old_path = out_path + ".__old__"
                     shutil.rmtree(tmp_path, ignore_errors=True)
@@ -449,7 +452,9 @@ class Graph:
                         )
                     os.unlink(manifest)
                     shutil.rmtree(stage_path, ignore_errors=True)
-                df = spark.read.parquet(out_path)
+                # read back with the schema just written: no footer
+                # inference job
+                df = spark.read.schema(df.schema).parquet(out_path)
         return df
 
     def _produce(

@@ -6,9 +6,16 @@ allows, built for real.
 Layout:
 
     <table>/
-      _log/v000001.json     {"version":1,"mode":"overwrite","files":[...]}
+      _log/v000001.json     {"version":1,"mode":"overwrite","files":[...],
+                             "schema":{StructType json}}
       _log/v000002.json     {"version":2,"mode":"append","files":[...]}
       part-....parquet      (immutable data files, never rewritten)
+
+``schema`` is present only when every file of the snapshot was written
+with it (an append with a different schema drops it; a merge-on-read
+delete keeps its base's), and ``read()`` then passes it to the parquet
+reader instead of inferring from footers. Entries without it (older
+logs, mixed-schema snapshots) and ``read(merge_schema=True)`` infer.
 
 Invariants (each carried by a specific mechanism):
 - **Atomic commit**: a version file is staged under a temp name and
@@ -37,10 +44,13 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import tempfile
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(Exception):
@@ -108,6 +118,45 @@ class TableLog:
         finally:
             os.unlink(tmp)
 
+    def _commit(
+        self, base: dict, mode: str, files: list[str], schema: dict | None, **extra
+    ) -> int:
+        """Publish version base+1 naming `files`, stamped with `schema`
+        when every one of them was written with it."""
+        version = base["version"] + 1
+        entry = {"version": version, "mode": mode, "files": files, **extra}
+        if schema is not None:
+            entry["schema"] = schema
+        self._publish(version, entry)
+        return version
+
+    def _stage(
+        self,
+        df: DataFrame,
+        prefix: str = "part",
+        check: Callable[[], None] | None = None,
+    ) -> tuple[list[str], dict]:
+        """Write df into a staging dir and move its parquet files into
+        the table as ``<prefix>-<uuid>.parquet``; returns their names
+        and the schema they were written with. The files stay invisible
+        until a commit names them. ``check`` runs after the write and
+        before any move: if it raises, nothing enters the table and the
+        staging dir is removed either way."""
+        staging = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
+        try:
+            df.write.mode("overwrite").parquet(staging)
+            if check is not None:
+                check()
+            names = []
+            for f in sorted(os.listdir(staging)):
+                if f.endswith(".parquet"):
+                    dst = f"{prefix}-{uuid.uuid4().hex}.parquet"
+                    os.rename(os.path.join(staging, f), os.path.join(self.path, dst))
+                    names.append(dst)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return names, df.schema.jsonValue()
+
     # -- write path ----------------------------------------------------
     def write(self, df: DataFrame, mode: str = "append") -> int:
         """Write df's rows as new immutable files + one log commit.
@@ -117,35 +166,16 @@ class TableLog:
         safely on disk and unreferenced)."""
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unknown mode: {mode}")
-        staging = os.path.join(
-            self.path, f"stage-{uuid.uuid4().hex}"
-        )
-        df.write.mode("overwrite").parquet(staging)
-        new_files = []
-        for f in sorted(os.listdir(staging)):
-            if not f.endswith(".parquet"):
-                continue
-            dst_name = f"part-{uuid.uuid4().hex}.parquet"
-            os.rename(
-                os.path.join(staging, f), os.path.join(self.path, dst_name)
-            )
-            new_files.append(dst_name)
-        # best-effort cleanup of the now-empty staging dir
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
-
+        files, schema = self._stage(df)
         base = self.snapshot()
-        version = base["version"] + 1
-        files = new_files if mode == "overwrite" else base["files"] + new_files
-        entry = {"version": version, "mode": mode, "files": files}
-        if mode == "append" and base.get("dvs"):
-            # merge-on-read deletes survive appends untouched: the DV
-            # sidecars keep masking the files they were stamped for.
-            entry["dvs"] = base["dvs"]
-            entry["dv_keys"] = base["dv_keys"]
-        self._publish(version, entry)
-        return version
+        if mode == "overwrite":
+            return self._commit(base, mode, files, schema)
+        if base["files"] and base.get("schema") != schema:
+            schema = None  # the snapshot now mixes schemas: reads infer
+        # merge-on-read deletes survive appends untouched: the DV
+        # sidecars keep masking the files they were stamped for.
+        dvs = {"dvs": base["dvs"], "dv_keys": base["dv_keys"]} if base.get("dvs") else {}
+        return self._commit(base, mode, base["files"] + files, schema, **dvs)
 
     def merge(
         self,
@@ -178,62 +208,42 @@ class TableLog:
         safe to add: the commit unit is a file LIST, so a pruned
         merge is the same transaction with a smaller rewrite set.
         """
-        from pyspark.sql import Window, functions as F
+        from pyspark.sql import Observation, Window, functions as F
 
-        # Reject duplicate keys in the source batch up front: with two
-        # batch rows for one key the "keep the batch row" rule has no
-        # unique answer, and the surviving row would be whichever the
-        # shuffle happened to order first — nondeterministic across
-        # runs. Same contract as Delta's MERGE, which raises on
-        # multiple source matches.
-        dup = (
-            df.groupBy(*keys)
-            .count()
-            .filter(F.col("count") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "merge source batch has duplicate keys for "
-                f"{keys}; dedupe upstream — the surviving row would be"
-                " arbitrary"
-            )
         snap = self.snapshot(base_version)
+        src = df.withColumn("__pri", F.lit(1))
         if snap["files"]:
-            base_df = self.read(spark, version=snap["version"])
-            merged = (
-                base_df.withColumn("__pri", F.lit(0))
-                .unionByName(df.withColumn("__pri", F.lit(1)))
-                .withColumn(
-                    "__rn",
-                    F.row_number().over(
-                        Window.partitionBy(*keys).orderBy(F.col("__pri").desc())
-                    ),
-                )
-                .filter(F.col("__rn") == 1)
-                .drop("__pri", "__rn")
+            base = self.read(spark, version=snap["version"])
+            src = base.withColumn("__pri", F.lit(0)).unionByName(src)
+        # Duplicate source keys are rejected: with two batch rows for
+        # one key the "keep the batch row" rule has no unique answer,
+        # and the survivor would be whichever the shuffle ordered
+        # first (Delta's MERGE raises on multiple source matches too).
+        # __nb counts a key's batch rows on the merge's own window, and
+        # the write observes its max — no second pass over the source.
+        w = Window.partitionBy(*keys).orderBy(F.col("__pri").desc())
+        whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        obs = Observation()
+        merged = (
+            src.select(
+                "*",
+                F.row_number().over(w).alias("__rn"),
+                F.sum("__pri").over(whole).alias("__nb"),
             )
-        else:
-            merged = df
-        staging = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
-        merged.write.mode("overwrite").parquet(staging)
-        new_files = []
-        for f in sorted(os.listdir(staging)):
-            if not f.endswith(".parquet"):
-                continue
-            dst = f"part-{uuid.uuid4().hex}.parquet"
-            os.rename(os.path.join(staging, f), os.path.join(self.path, dst))
-            new_files.append(dst)
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
-        version = snap["version"] + 1
-        self._publish(
-            version,
-            {"version": version, "mode": "merge", "files": new_files},
+            .filter(F.col("__rn") == 1)
+            .observe(obs, F.max("__nb").alias("nb"))
+            .drop("__pri", "__rn", "__nb")
         )
-        return version
+
+        def reject_duplicates() -> None:
+            if (obs.get["nb"] or 0) > 1:
+                raise ValueError(
+                    "merge source batch has duplicate keys for "
+                    f"{keys}; dedupe upstream — the surviving row would be"
+                    " arbitrary"
+                )
+
+        return self._commit(snap, "merge", *self._stage(merged, check=reject_duplicates))
 
     def delete(
         self,
@@ -256,28 +266,10 @@ class TableLog:
         snap = self.snapshot(base_version)
         if not snap["files"]:
             raise ValueError("nothing to delete from")
-        base_df = self.read(spark, version=snap["version"])
-        remaining = base_df.join(
+        remaining = self.read(spark, version=snap["version"]).join(
             df_keys.select(*keys).dropDuplicates(keys), on=keys, how="left_anti"
         )
-        staging = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
-        remaining.write.mode("overwrite").parquet(staging)
-        new_files = []
-        for f in sorted(os.listdir(staging)):
-            if not f.endswith(".parquet"):
-                continue
-            dst = f"part-{uuid.uuid4().hex}.parquet"
-            os.rename(os.path.join(staging, f), os.path.join(self.path, dst))
-            new_files.append(dst)
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
-        version = snap["version"] + 1
-        self._publish(
-            version,
-            {"version": version, "mode": "delete", "files": new_files},
-        )
-        return version
+        return self._commit(snap, "delete", *self._stage(remaining))
 
     def delete_mor(
         self,
@@ -309,34 +301,17 @@ class TableLog:
             raise ValueError("nothing to delete from")
         if snap.get("dv_keys") not in (None, keys):
             raise ValueError("DV key columns must match prior DVs")
-        staging = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
-        df_keys.select(*keys).dropDuplicates(keys).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        dv_files = []
-        for f in sorted(os.listdir(staging)):
-            if not f.endswith(".parquet"):
-                continue
-            dst = f"dv-{uuid.uuid4().hex}.parquet"
-            os.rename(os.path.join(staging, f), os.path.join(self.path, dst))
-            # scope the DV to the files it was stamped against — later
-            # appends are outside its mask by construction
-            dv_files.append({"name": dst, "over": list(snap["files"])})
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
-        version = snap["version"] + 1
-        self._publish(
-            version,
-            {
-                "version": version,
-                "mode": "delete-mor",
-                "files": snap["files"],
-                "dvs": snap.get("dvs", []) + dv_files,
-                "dv_keys": keys,
-            },
+        names, _ = self._stage(
+            df_keys.select(*keys).dropDuplicates(keys).coalesce(1), prefix="dv"
         )
-        return version
+        # scope the DV to the files it was stamped against — later
+        # appends are outside its mask by construction
+        dvs = [{"name": n, "over": list(snap["files"])} for n in names]
+        # the data files are untouched, so the base's schema stamp holds
+        return self._commit(
+            snap, "delete-mor", snap["files"], snap.get("schema"),
+            dvs=snap.get("dvs", []) + dvs, dv_keys=keys,
+        )
 
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
         """OPTIMIZE: rewrite the current snapshot's many small files
@@ -350,25 +325,8 @@ class TableLog:
         snap = self.snapshot()
         if not snap["files"]:
             raise ValueError("nothing to compact")
-        df = self.read(spark).coalesce(target_files)
-        staging = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
-        new_files = []
-        for f in sorted(os.listdir(staging)):
-            if not f.endswith(".parquet"):
-                continue
-            dst = f"part-{uuid.uuid4().hex}.parquet"
-            os.rename(os.path.join(staging, f), os.path.join(self.path, dst))
-            new_files.append(dst)
-        import shutil
-
-        shutil.rmtree(staging, ignore_errors=True)
-        version = snap["version"] + 1
-        self._publish(
-            version,
-            {"version": version, "mode": "compact", "files": new_files},
-        )
-        return version
+        rewritten = self.read(spark).coalesce(target_files)
+        return self._commit(snap, "compact", *self._stage(rewritten))
 
     def vacuum(self, retain_last: int = 1) -> dict:
         """VACUUM: physically delete data files that no snapshot in
@@ -444,6 +402,10 @@ class TableLog:
         reader = spark.read
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
+        elif snap.get("schema"):
+            # every file was written with this schema: pinning it skips
+            # Spark's footer-inference job
+            reader = reader.schema(StructType.fromJson(snap["schema"]))
         dvs = _norm_dvs(snap)
         if not dvs:
             paths = [os.path.join(self.path, f) for f in snap["files"]]

@@ -2,7 +2,10 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -15,6 +18,24 @@ from dags_spark.testing import duck_connect  # noqa: E402
 # Small SF for unit tests; tools/check.py covers sf0.01 (the driver's
 # t2 scale) and the driver itself is the final gate.
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+@contextmanager
+def count_jobs(spark):
+    """Count the Spark jobs the block launches from this thread:
+    ``with count_jobs(spark) as jobs: ...`` then read ``jobs.n``."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    jobs = SimpleNamespace(n=None)
+    sc.setJobGroup(group, group)
+    try:
+        yield jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status tracker through the
+        # asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pytest_configure(config):

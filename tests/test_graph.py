@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 from dags_spark.graph.core import Graph, GraphError
 from dags_spark.io import table
 
+from .conftest import count_jobs
+
 
 def test_topo_run_python_and_sql_nodes(spark, sf_dir):
     g = Graph("t1")
@@ -110,6 +112,25 @@ def test_materialize_writes_parquet(spark, sf_dir):
     res = g.run(spark, output_dir=out_dir)
     assert os.path.isdir(os.path.join(out_dir, "nations"))
     assert res["nations"].count() == 25
+
+
+def test_materialized_node_reads_back_without_a_job(spark, tmp_path):
+    """A materialized node's returned DataFrame is read back with the
+    schema it was just written with: run() launches exactly the jobs
+    of the write, none for footer inference."""
+
+    def rows(s, deps):
+        return s.range(100).selectExpr("id AS k", "id % 7 AS v")
+
+    g = Graph("readback")
+    g.node(materialize=True)(rows)
+    with count_jobs(spark) as plain:
+        rows(spark, {}).write.parquet(str(tmp_path / "plain"))
+    with count_jobs(spark) as run:
+        res = g.run(spark, output_dir=str(tmp_path / "out"))["rows"]
+    assert plain.n >= 1
+    assert run.n == plain.n
+    assert res.count() == 100
 
 
 def test_incremental_source_processes_only_new_files(spark, sf_dir):

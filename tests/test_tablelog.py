@@ -10,6 +10,8 @@ import pytest
 
 from dags_spark.tablelog import CommitConflict, TableLog, tmp_table
 
+from .conftest import count_jobs
+
 
 def test_version_chain_and_time_travel(spark):
     t = tmp_table()
@@ -224,16 +226,74 @@ def test_mor_delete_scopes_to_stamped_files_reinsert_survives(spark):
 
 def test_merge_rejects_duplicate_batch_keys(spark):
     """merge() raises on duplicate source keys instead of letting the
-    shuffle pick an arbitrary survivor (Delta MERGE's contract)."""
+    shuffle pick an arbitrary survivor (Delta MERGE's contract), on the
+    empty and the non-empty base alike, and the rejected merge leaves
+    nothing behind: no version, no staging dir, no unreferenced file."""
+    full = tmp_table()
+    full.write(spark.createDataFrame([(1, 10.0)], "k INT, v DOUBLE"), "overwrite")
+    dup = spark.createDataFrame([(2, 1.0), (2, 2.0), (3, 3.0)], "k INT, v DOUBLE")
+    for t in (full, tmp_table()):
+        before = t.latest_version()
+        with pytest.raises(ValueError, match="duplicate keys"):
+            t.merge(spark, dup, keys=["k"])
+        assert t.latest_version() == before
+        assert not [f for f in os.listdir(t.path) if f.startswith("stage-")]
+        parts = {f for f in os.listdir(t.path) if f.startswith("part-")}
+        assert parts == set(t.snapshot()["files"])
+    # a key duplicated only ACROSS base and batch is the normal upsert
+    assert full.merge(spark, dup.filter("v != 1.0"), keys=["k"]) == 2
+
+
+def test_schema_stamp_pins_reads_and_falls_back(spark):
+    """Commits whose files share one schema record it and read() pins
+    it; an append that changes the schema drops the stamp (reads infer
+    again, merge_schema still widens), a merge-on-read delete keeps its
+    base's stamp, and a legacy entry without one reads as before."""
+    import json
+
+    from pyspark.sql.types import StructType
+
     t = tmp_table()
-    t.write(spark.createDataFrame([(1, 10.0)], "k INT, v DOUBLE"), "overwrite")
-    dup = spark.createDataFrame([(2, 1.0), (2, 2.0)], "k INT, v DOUBLE")
-    with pytest.raises(ValueError, match="duplicate keys"):
-        t.merge(spark, dup, keys=["k"])
-    # empty-table branch enforces the same contract
-    t2 = tmp_table()
-    with pytest.raises(ValueError, match="duplicate keys"):
-        t2.merge(spark, dup, keys=["k"])
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "k INT, s STRING"), "overwrite")
+    t.write(spark.createDataFrame([(3, "c")], "k INT, s STRING"), "append")
+    stamp = t.snapshot()["schema"]
+    assert StructType.fromJson(stamp) == t.read(spark).schema
+    t.delete_mor(spark, spark.createDataFrame([(2,)], "k INT"), ["k"])
+    assert t.snapshot()["schema"] == stamp
+    assert {r["k"] for r in t.read(spark).collect()} == {1, 3}
+
+    # legacy entry: the same commit with its stamp removed
+    t.write(spark.createDataFrame([(4, "d")], "k INT, s STRING"), "overwrite")
+    rows = sorted(t.read(spark).collect())
+    path = t._version_file(t.latest_version())
+    with open(path) as fh:
+        entry = json.load(fh)
+    del entry["schema"]
+    with open(path, "w") as fh:
+        json.dump(entry, fh)
+    assert sorted(t.read(spark).collect()) == rows
+
+    e = tmp_table()
+    e.write(spark.createDataFrame([(1, "a")], "k INT, s STRING"), "overwrite")
+    e.write(spark.createDataFrame([(2, "b", 2.5)], "k INT, s STRING, x DOUBLE"), "append")
+    assert "schema" not in e.snapshot()
+    wide = e.read(spark, merge_schema=True)
+    assert wide.columns == ["k", "s", "x"]
+    assert {r["k"]: r["x"] for r in wide.collect()} == {1: None, 2: 2.5}
+
+
+def test_snapshot_read_launches_no_job(spark):
+    """A stamped snapshot read resolves its schema from the log: no
+    Spark job runs before the caller's action, for a written and for a
+    merged version (merge's own base read goes through the same path)."""
+    t = tmp_table()
+    t.write(spark.range(50).selectExpr("id AS k", "id * 2 AS v"), "overwrite")
+    t.merge(spark, spark.range(40, 60).selectExpr("id AS k", "id AS v"), ["k"])
+    for v in (1, 2):
+        with count_jobs(spark) as jobs:
+            df = t.read(spark, version=v)
+        assert jobs.n == 0
+        assert df.count() == (50 if v == 1 else 60)
 
 
 def test_delta_export_action_level_protocol(spark):
