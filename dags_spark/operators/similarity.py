@@ -116,302 +116,245 @@ def with_norm(df: DataFrame, vec_col: str, out_vec: str = "vec_d", out_norm: str
     return df.withColumn(out_vec, d).withColumn(out_norm, norm(F.col(out_vec)))
 
 
+def chunk_pairs(emb: DataFrame, id_col: str, m: int) -> DataFrame:
+    """Attach the chunk-pair grouping columns of ``blocked_pairs``:
+    ``__ck`` is the row's chunk (xxhash64 of its id, mod m) and the
+    row is copied once into each of the m unordered chunk pairs
+    ``(__ca, __cb)`` that contain ``__ck``. Group (c, c) then holds
+    chunk c alone and runs its triangle; group (ca, cb), ca < cb, runs
+    the bipartite cross. Every unordered pair of a block lands in
+    exactly one group, at the cost of shuffling the row m times."""
+    ck = F.pmod(F.xxhash64(F.col(id_col)), F.lit(m)).cast("int")
+    sides = [
+        F.struct(
+            F.least("__ck", F.lit(x)).alias("__ca"),
+            F.greatest("__ck", F.lit(x)).alias("__cb"),
+        )
+        for x in range(m)
+    ]
+    return emb.withColumn("__ck", ck).select("*", F.inline(F.array(*sides)))
+
+
+def _metric(name: str):
+    """The pair metric of ``blocked_pairs``: its GEMM score (higher is
+    closer for both), its exact sequential fold, its GEMM and exact
+    margin floors for a cut t, and its output column. Built inside a
+    function so the kernel closure pickles it by value: Python workers
+    never need to import this package."""
+
+    def fold(m: np.ndarray, ia: np.ndarray, ib: np.ndarray, term) -> np.ndarray:
+        """Sequential fold of term(a_i, b_i) over dimensions, vectorized
+        over pairs — the left-to-right order of F.aggregate and DuckDB
+        list_sum, so every sum is bit-identical to the oracle's."""
+        acc = np.zeros(len(ia))
+        for i in range(m.shape[1]):
+            acc = acc + term(m[ia, i], m[ib, i])
+        return acc
+
+    class Cosine:
+        """GEMM over unit rows; exact = dot fold over the product of
+        the fold norms."""
+
+        col, sign = "sim", 1.0
+
+        def __init__(self, m: np.ndarray):
+            self.m = m
+            idx = np.arange(len(m))
+            self.norms = np.sqrt(fold(m, idx, idx, np.multiply))
+            self.unit = m / self.norms[:, None]
+
+        def gemm(self, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+            return self.unit[a] @ self.unit[b].T
+
+        def exact(self, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
+            return fold(self.m, ia, ib, np.multiply) / (self.norms[ia] * self.norms[ib])
+
+        @staticmethod
+        def gemm_floor(t):
+            return t - 1.01e-6
+
+        @staticmethod
+        def exact_floor(t):
+            return t - 1e-6
+
+    class L2:
+        """Score = negated distance. GEMM on ||a||^2 + ||b||^2 - 2ab;
+        exact = one sqrt of the squared-difference fold."""
+
+        col, sign = "l2", -1.0
+
+        def __init__(self, m: np.ndarray):
+            self.m = m
+            self.sq = np.einsum("ij,ij->i", m, m)
+
+        def gemm(self, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+            m = self.m
+            return -(self.sq[a][:, None] + self.sq[b][None, :] - 2.0 * (m[a] @ m[b].T))
+
+        def exact(self, ia: np.ndarray, ib: np.ndarray) -> np.ndarray:
+            return -np.sqrt(fold(self.m, ia, ib, lambda x, y: np.square(x - y)))
+
+        @staticmethod
+        def gemm_floor(t):
+            return -((t + 1e-6) ** 2 + 1e-9)
+
+        @staticmethod
+        def exact_floor(t):
+            return -(t + 1.01e-6)
+
+    return {"cosine": Cosine, "l2": L2}[name]
+
+
+_TILE = 2048
+
+
 def blocked_pairs(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     block_col: str = "label",
+    metric: str = "cosine",
     symmetric: bool = False,
-    max_block_rows: int = 8192,
+    max_block_rows: int | None = 8192,
+    threshold: float | None = None,
     per_block_topk: int | None = None,
     per_query_topk: int | None = None,
-    min_sim: float | None = None,
     n_chunks: int | None = None,
     round_dp: int | None = 6,
-    pre_chunked: bool = False,
 ) -> DataFrame:
-    """Candidate pairs within a block with exact cosine similarity
-    (rounded 6dp) — columns: id_a, id_b, <block_col>, sim.
+    """Exact same-block vector pairs — columns: id_a, id_b,
+    <block_col>, and ``sim`` (cosine) or ``l2`` (Euclidean distance),
+    rounded JVM-side to ``round_dp`` places (``F.round`` HALF_UP ==
+    DuckDB ROUND). ``round_dp=None`` emits the raw doubles for
+    consumers that quantize on their own finer lattice.
 
-    symmetric=False -> unordered pairs (id_a < id_b);
-    symmetric=True  -> both directions (for per-query kNN).
+    Execution: one ``applyInPandas`` numpy kernel per block (or
+    chunk-pair group). Candidates are chosen on tiled float64 GEMM
+    scores (2048-wide tiles, bounded memory at any block size); the
+    survivors are recomputed with the exact sequential fold the
+    oracle uses (loop over dimensions, vectorize over pairs; each
+    float32 product is exact in float64), and every final decision
+    is taken on those exact values — so each emitted double is
+    bit-identical to DuckDB's ``list_sum``. Internally both metrics
+    score "higher is closer" (L2 is negated).
 
-    Execution: Arrow-batched ``applyInPandas`` per block — one numpy
-    kernel per label group instead of a JVM join that materializes a
-    64-double array copy per pair (~30x faster at 2k vectors). Every
-    EMITTED similarity is accumulated in the exact left-to-right
-    order of ``F.aggregate``/DuckDB ``list_sum`` (loop over
-    DIMENSIONS, vectorize over PAIRS) — each float32*float32 product
-    is exact in float64 and the fold order matches, making the raw
-    doubles bit-identical to the SQL oracle. Rounding to 6dp stays
-    JVM-side (``F.round`` HALF_UP == DuckDB ROUND; numpy's scaled
-    round can misround the last ulp).
+    Axes — every combination below runs one tile loop, one keep rule
+    (``score >= floor``) and one exact re-rank:
 
-    ROUND 10 (guide §4.2 — hand whole batches to BLAS): pruning
-    consumers (``per_block_topk`` / ``per_query_topk`` / ``min_sim``)
-    no longer pay the sequential fold for ALL O(n^2) pairs. CANDIDATE
-    SELECTION runs as tiled float64 GEMMs (2048-wide, ~32 MB a tile,
-    near-peak BLAS instead of 2*dim fancy-index gathers per pair) and
-    only the survivors are recomputed with the exact sequential fold
-    above, so the emitted values are unchanged to the last bit. The
-    GEMM prefilter is lossless because its values differ from the
-    fold by < ~1e-13 absolute (both sum the same 64 exact float64
-    products; normalized inputs bound the condition number), and
-    every cut keeps a 1.01e-6 margin below the decision boundary —
-    four orders of magnitude wider than the worst-case discrepancy —
-    with the final decision re-taken on the exact folds. Measured
-    (tools/ab_r10.py, old/new interleaved one session, min-of-N):
-    sf0.1 whole-query q6 1.09x, kNN 1.12x (fixed scheduling cost
-    dominates at 20k vectors); sf10 tier q6 12.65 -> 12.11 s (4m
-    splits) and 34.8 -> 29.8 s (2m splits). The bigger round-10 gain
-    at the tiers is EXACTNESS: the old big-block path emitted raw
-    GEMM doubles (documented last-ulp-off vs the oracle), the new
-    path re-ranks survivors with the exact fold — sf10 q6 output now
-    matches the DuckDB oracle bit-for-bit (verified this round).
+    metric: ``"cosine"`` or ``"l2"``. Each metric has a GEMM floor
+    and an exact floor for a cut t:
 
-    Scale: one shuffle on the block key; each block must fit one
-    task (fine for label/IVF-bucket blocking — cap block sizes
-    upstream by splitting hot buckets, e.g. sub-bucket on an LSH
-    band as in ann_lsh_topk).
+    - cosine: GEMM ``t - 1.01e-6``, exact ``t - 1e-6``. A sim can
+      round (6dp HALF_UP moves a value by <= 5e-7) to >= t only if
+      raw >= t - 5e-7, inside the exact floor; the GEMM score differs
+      from the fold by < ~1e-13 (same 64 exact products, normalized
+      inputs), so the extra 1e-8 keeps every pair the exact cut keeps.
+    - l2: GEMM ``-((t + 1e-6)^2 + 1e-9)`` on the negated squared
+      distance, exact ``-(t + 1.01e-6)`` on the negated distance. A
+      pair rounds to ``l2 <= t`` only if raw l2 <= t + 5e-7; the
+      1e-9 slack on d^2 dwarfs the < ~1e-10 gap between the GEMM
+      identity and the difference fold.
 
-    per_block_topk=k: keep only each block's k best pairs (by
-    sim desc, id_a, id_b — the same total order downstream top-k
-    uses, so a global top-k over the pruned stream is EXACTLY the
-    global top-k over all pairs: a globally-ranked pair is also
-    top-k within its own block under any total order), plus any
-    boundary rows within 1e-6 raw sim of the k-th (downstream
-    consumers rank the ROUNDED sims, and 6dp rounding can merge two
-    raw values that differ by < 1e-6 into an id-tiebroken tie; the
-    margin rows make the pruned stream safe under that order too —
-    emitting a handful of extra rows is always sound for a top-k
-    consumer). For pure top-k consumers this cuts the Arrow transfer
-    from O(block^2) rows to ~k per block — at sf1 (20k vectors) that
-    is 20M pair rows down to ~1k.
+    selection (at most one of):
 
-    n_chunks=m (unordered-pair consumers only, i.e. symmetric=False
-    with per_block_topk or min_sim): split each block's upper
-    triangle into m(m+1)/2 chunk-pair kernel tasks (deterministic
-    xxhash64 chunking; (c,c) groups run the chunk's triangle,
-    (ca,cb) groups the bipartite cross) so stage parallelism stops
-    being bounded by the number of blocks. Every unordered pair
-    lands in exactly one group, so min_sim output is identical and
-    per-group top-k (+margin ties) is a superset of the block top-k
-    that the consumer's global top-k trims to the same rows. The
-    vector column is shuffled m times instead of once — use when the
-    kernel dominates the exchange (big blocks), and derive m from
-    ``defaultParallelism`` so it scales with the cluster.
+    - none: every pair (GEMM cut keeps all).
+    - ``threshold=t``: cosine keeps sim >= t, l2 keeps l2 <= t, each
+      down to its metric's floors; the consumer's filter on the
+      rounded values still decides, so the result is identical while
+      the Arrow transfer carries only the matches.
+    - ``per_block_topk=k`` (cosine, unordered): each group keeps its
+      k best pairs plus every pair within the floor of the k-th. A
+      globally top-k pair is top-k in its own block (and chunk-pair
+      group) under the same total order, and two pairs can swap
+      6dp-rounded order only when their raw sims differ by < 1e-6 —
+      so a consumer's global rounded top-k over the pruned stream
+      equals its top-k over all pairs.
+    - ``per_query_topk=k`` (cosine, ``symmetric=True``): the same cut
+      per query row (id_a), for per-query kNN consumers.
 
-    min_sim=t: threshold pushdown for dedup consumers that filter
-    ``sim >= t`` downstream: the kernel emits only pairs with raw
-    sim >= t - 1e-6 (every row whose ROUNDED sim can pass the
-    consumer's filter survives: HALF_UP 6dp rounding moves a value
-    by <= 5e-7). The downstream filter still applies on the rounded
-    values, so results are identical — but the Arrow transfer drops
-    from O(block^2) rows to the matching pairs only, and candidate
-    selection runs on the GEMM prefilter. Leave None for consumers
-    that need every pair.
+    The margins also cover ``round_dp=None`` consumers, which quantize
+    at 1e-9 or 1e-12: two rows can swap quantized order only when
+    their raw values differ by less than that quantum.
 
-    per_query_topk=k (symmetric consumers): keep only each QUERY's
-    ~k best neighbors (by sim desc, id_b) inside the kernel, so a
-    per-query kNN emits O(k) rows per vector into its downstream
-    window instead of O(block) — the round-9 fix for the one
-    remaining avoidable-shuffle anti-pattern (sim_knn_per_query
-    shipped O(block^2) pair rows through a shuffle+window). The
-    prune is provably lossless against the consumer's ROUNDED-sim
-    ordering: rows are kept down to (k-th raw sim - 1e-6), and 6dp
-    HALF_UP rounding moves any value by <= 5e-7, so two pairs can
-    swap rounded order only when their raw sims differ by < 1e-6 —
-    every such boundary row survives the margin and the downstream
-    row_number sees the identical top-k candidate set.
+    pairing: unordered pairs (id_a < id_b) within the group — the
+    block's upper triangle, or, when the group carries ``__ca !=
+    __cb`` (see ``chunk_pairs``), the bipartite pairs between rows
+    with ``__ck == __ca`` and rows with ``__ck == __cb``.
+    ``symmetric=True`` emits both directions of every pair instead.
+    ``n_chunks=m > 1`` splits each block into m(m+1)/2 chunk-pair
+    groups so kernel parallelism is not bounded by the number of
+    blocks; every pair lands in one group, so thresholds are
+    unchanged and per-group top-k is a superset of the block top-k.
+    Derive m from ``adaptive_chunks``. Callers may also attach the
+    ``__ck/__ca/__cb`` columns themselves to pair two sides of a
+    block (sim_label_separation's cross-label pairs).
 
-    round_dp (round 11): decimal places of the final JVM-side
-    F.round on sim — the family's 6dp hashing lane by default. Pass
-    None to emit the RAW exact-fold doubles for consumers that
-    quantize on their own (finer) lattice: sim_knn_hubness rounds at
-    1e-12 and sim_label_separation at 1e-9, both strictly finer than
-    the kernel's 1e-6 prune margins, so every prune argument above
-    holds a fortiori (two rows can swap quantized order only when
-    their raw sims differ by less than the quantum << the margin).
+    Pairs whose score is NaN (a zero vector under cosine) are never
+    emitted. Combinations no caller needs raise at plan build.
 
-    pre_chunked (round 11, internal): the caller has ALREADY attached
-    __ck/__ca/__cb chunk columns and wants the kernel grouped by
-    (block_col, __ca, __cb) — used by sim_label_separation's
-    bipartite cross-label pairing, where the "chunks" are the two
-    label sides rather than a hash split. Exactly one group per
-    (block, side-pair); the kernel's bipartite branch emits each
-    cross pair once.
-
-    Hot-block guard: the kernel is O(block^2) BY DESIGN, so a skewed
-    block key (one label holding 10^6 rows at 100 TB) would silently
-    turn the operator quadratic and OOM one task. Any block larger
-    than ``max_block_rows`` raises with the sub-bucketing advice
-    instead — loud task failure over a silent 10^12-pair kernel.
+    Hot-block guard: unless the selection is ``per_block_topk``
+    (whose output stays ~k rows per group at any size), a group over
+    ``max_block_rows`` raises with sub-bucketing advice instead of
+    silently running an O(n^2) kernel on a skewed block key.
+    ``max_block_rows=None`` lifts the cap.
     """
+    met_cls = _metric(metric)
+    if (n_chunks or 1) > 1:
+        emb = chunk_pairs(emb.select(id_col, block_col, vec_col), id_col, n_chunks)
+    chunked = "__ca" in emb.columns
+    picked = [x for x in (threshold, per_block_topk, per_query_topk) if x is not None]
+    for bad, why in (
+        (len(picked) > 1, "pick one of threshold, per_block_topk, per_query_topk"),
+        (symmetric and per_block_topk is not None, "per_block_topk ranks unordered pairs"),
+        (per_query_topk is not None and not symmetric, "per_query_topk needs symmetric=True"),
+        (metric == "l2" and picked and threshold is None, "metric='l2' has no top-k selection"),
+        (symmetric and chunked, "symmetric pairs cannot be chunked"),
+    ):
+        if bad:
+            raise ValueError(f"blocked_pairs: {why}")
+    k = per_block_topk or per_query_topk
     id_type = emb.schema[id_col].dataType.simpleString()
     blk_type = emb.schema[block_col].dataType.simpleString()
     out_schema = (
-        f"id_a {id_type}, id_b {id_type}, {block_col} {blk_type}, sim double"
+        f"id_a {id_type}, id_b {id_type}, {block_col} {blk_type}, {met_cls.col} double"
     )
 
-    # Margins (see docstring): 1e-6 covers the 6dp HALF_UP rounding
-    # boundary; the extra 1e-8 dwarfs the < ~1e-13 GEMM-vs-fold
-    # float64 discrepancy while staying far under any real sim gap.
-    _GEMM_MARGIN = 1.01e-6
-    _TILE = 2048
+    def floor(x: np.ndarray, metric_floor) -> np.ndarray | float:
+        """Keep floor for scores x (2-D: rows are queries): the
+        threshold, or the k-th best score over all of x
+        (per_block_topk) or per row (per_query_topk), lowered by the
+        metric's margin. -inf (keep all) while there are <= k scores;
+        NaN mask cells sort last and never pass."""
+        if threshold is not None:
+            return metric_floor(threshold)
+        if per_block_topk is not None:
+            x = x.reshape(-1)
+        if k is None or x.shape[-1] <= k:
+            return -np.inf
+        kth = -np.partition(-x, k - 1, axis=-1)[..., k - 1 : k]
+        return np.fmax(metric_floor(kth), -np.inf)
 
-    def _exact_sims(
-        m: np.ndarray, norms: np.ndarray, ia: np.ndarray, ib: np.ndarray
-    ) -> np.ndarray:
-        """Sequential-fold cosine for the given pair index arrays —
-        the bit-exact arithmetic of F.aggregate / DuckDB list_sum
-        (loop over dimensions, vectorize over pairs)."""
-        acc = np.zeros(len(ia))
-        for i in range(m.shape[1]):
-            acc = acc + m[ia, i] * m[ib, i]
-        return acc / (norms[ia] * norms[ib])
-
-    def _gemm_pairs_topk(
-        pdf: pd.DataFrame,
-        m: np.ndarray,
-        norms: np.ndarray,
-        n: int,
-        a_idx: np.ndarray | None = None,
-        b_idx: np.ndarray | None = None,
-    ) -> pd.DataFrame:
-        """Unordered-pair candidate selection via tiled GEMM
-        (bounded memory: ~32 MB a tile at any n), exact re-rank of
-        the survivors. Emits the group's top-k under (sim desc,
-        id_a, id_b) plus 1e-6-boundary ties; min_sim mode emits every
-        pair with raw sim >= min_sim - 1e-6. All emitted sims are the
-        exact sequential fold.
-
-        a_idx/b_idx (chunk-pair mode): restrict to the BIPARTITE
-        pairs between two disjoint row subsets (indices into the
-        id-sorted frame) instead of the full upper triangle — the
-        n_chunks split. Pairs are emitted id-ordered (ids follow the
-        sorted index order, so a simple index swap suffices)."""
-        k = per_block_topk
-        mn = m / norms[:, None]
-        ia_l: list[np.ndarray] = []
-        ib_l: list[np.ndarray] = []
-        g_l: list[np.ndarray] = []
-
-        def _keep_tile(s: np.ndarray) -> np.ndarray:
-            """Flat survivor positions of one GEMM tile — the cut is
-            taken on the RAW tile before any index materialization
-            (np.repeat/np.tile of the full 4M-pair index arrays per
-            2048^2 tile cost ~2x the GEMM itself at the sf100 tier;
-            survivors are ~k, so building indices only for them via
-            divmod is ~free). -inf cells (masked diagonal) never
-            survive either cut."""
-            flat = s.ravel()
-            if min_sim is not None:
-                return np.flatnonzero(flat >= min_sim - _GEMM_MARGIN)
-            if k is not None and flat.size > k:
-                part = np.argpartition(-flat, k - 1)[:k]
-                thr = flat[part].min() - _GEMM_MARGIN
-                if not np.isfinite(thr):
-                    # fewer than k real pairs in a masked tile: the
-                    # k-th value is a -inf mask cell, and -inf >= -inf
-                    # would resurrect diagonal cells as self-pairs
-                    return np.flatnonzero(np.isfinite(flat))
-                return np.flatnonzero(flat >= thr)
-            return np.flatnonzero(np.isfinite(flat))
-
-        def _emit(s, keep, rows, cols, ordered):
-            sims = s.ravel()[keep]
-            qi, j = np.divmod(keep, len(cols))
-            ia, ib = rows[qi], cols[j]
-            if not ordered:
-                # disjoint chunks -> ia != ib; order pairs by index
-                # (== id order on the sorted frame)
-                sw = ia > ib
-                ia, ib = np.where(sw, ib, ia), np.where(sw, ia, ib)
-            ia_l.append(ia)
-            ib_l.append(ib)
-            g_l.append(sims)
-
-        if a_idx is not None:
-            for i0 in range(0, len(a_idx), _TILE):
-                at = a_idx[i0 : i0 + _TILE]
-                for j0 in range(0, len(b_idx), _TILE):
-                    bt = b_idx[j0 : j0 + _TILE]
-                    s = mn[at] @ mn[bt].T
-                    _emit(s, _keep_tile(s), at, bt, ordered=False)
-        else:
-            for i0 in range(0, n, _TILE):
-                ai = mn[i0 : i0 + _TILE]
-                rows = np.arange(i0, min(i0 + _TILE, n))
-                for j0 in range(i0, n, _TILE):
-                    s = ai @ mn[j0 : j0 + _TILE].T
-                    cols = np.arange(j0, min(j0 + _TILE, n))
-                    if i0 == j0:
-                        # mask the diagonal+lower triangle out before
-                        # the flat cut (no triu fancy-index pass)
-                        s[np.tril_indices(s.shape[0], 0, s.shape[1])] = -np.inf
-                    _emit(s, _keep_tile(s), rows, cols, ordered=True)
-        ia = np.concatenate(ia_l) if ia_l else np.array([], dtype=np.int64)
-        ib = np.concatenate(ib_l) if ib_l else np.array([], dtype=np.int64)
-        g = np.concatenate(g_l) if g_l else np.array([])
-        if k is not None and len(g) > k:
-            # global GEMM cut before the exact recompute
-            part = np.argpartition(-g, k - 1)[:k]
-            kth = g[part].min()
-            keep = np.flatnonzero(g >= kth - _GEMM_MARGIN)
-            ia, ib = ia[keep], ib[keep]
-        # exact re-rank: survivors recomputed with the fold the
-        # oracle uses; every decision below is on exact values
-        sim = _exact_sims(m, norms, ia, ib)
-        if min_sim is not None:
-            keep = np.flatnonzero(sim >= min_sim - 1e-6)
-            ia, ib, sim = ia[keep], ib[keep], sim[keep]
-        if k is not None and len(sim) > k:
-            order = np.lexsort((ib, ia, -sim))
-            ia, ib, sim = ia[order], ib[order], sim[order]
-            kth = sim[k - 1]
-            cut = int(np.searchsorted(-sim, -(kth - 1e-6), side="right"))
-            ia, ib, sim = ia[:cut], ib[:cut], sim[:cut]
-        ids = pdf[id_col].to_numpy()
-        return pd.DataFrame(
-            {
-                "id_a": ids[ia],
-                "id_b": ids[ib],
-                block_col: pdf[block_col].iloc[0],
-                "sim": sim,
-            }
-        )
-
-    def _gemm_query_candidates(
-        m: np.ndarray, norms: np.ndarray, n: int
-    ) -> tuple[np.ndarray, np.ndarray]:
-        """Per-query candidate selection for the symmetric kNN path:
-        each query keeps its per_query_topk best neighbors by GEMM
-        sim plus the margin band — a superset of the exact top-k and
-        of every 1e-6 boundary row, so the exact per-query prune
-        below sees the identical candidate set it would have seen
-        over all pairs."""
-        k = per_query_topk
-        mn = m / norms[:, None]
-        ia_l: list[np.ndarray] = []
-        ib_l: list[np.ndarray] = []
-        for q0 in range(0, n, _TILE):
-            s = mn[q0 : q0 + _TILE] @ mn.T
-            rows = np.arange(s.shape[0])
-            s[rows, rows + q0] = -np.inf  # exclude self
-            if n - 1 > k:
-                kth = -np.partition(-s, k - 1, axis=1)[:, k - 1]
-                mask = s >= (kth - _GEMM_MARGIN)[:, None]
-            else:
-                mask = np.isfinite(s)
-            qi, j = np.nonzero(mask)
-            ia_l.append(qi + q0)
-            ib_l.append(j)
-        return np.concatenate(ia_l), np.concatenate(ib_l)
+    def tiles(pdf: pd.DataFrame):
+        """(rows, cols, masked cells) GEMM tiles of one group's pairing."""
+        a = b = np.arange(len(pdf))
+        if "__ca" in pdf.columns and pdf["__ca"].iat[0] != pdf["__cb"].iat[0]:
+            ck = pdf["__ck"].to_numpy()
+            a = np.flatnonzero(ck == pdf["__ca"].iat[0])
+            b = np.flatnonzero(ck == pdf["__cb"].iat[0])
+        for i0 in range(0, len(a), _TILE):
+            rows = a[i0 : i0 + _TILE]
+            if symmetric:  # whole rows: the per-query cut sees every neighbour
+                yield rows, b, (np.arange(len(rows)), rows)
+                continue
+            for j0 in range(i0 if a is b else 0, len(b), _TILE):
+                cols = b[j0 : j0 + _TILE]
+                diag = a is b and i0 == j0  # mask the diagonal + lower triangle
+                yield rows, cols, np.tril_indices(len(rows), 0, len(cols)) if diag else None
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
         n = len(pdf)
-        if n > max_block_rows and (per_block_topk is None or symmetric):
+        if max_block_rows is not None and n > max_block_rows and per_block_topk is None:
             raise ValueError(
                 f"blocked_pairs: block {pdf[block_col].iloc[0]!r} has {n} rows "
                 f"(> max_block_rows={max_block_rows}); the within-block kernel "
@@ -420,294 +363,50 @@ def blocked_pairs(
                 f"(Unordered top-k consumers scale past the cap automatically "
                 f"via the tiled-GEMM path.)"
             )
-        empty = pd.DataFrame({"id_a": [], "id_b": [], block_col: [], "sim": []})
-        if n < 2:
-            return empty
-        m = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        dim = m.shape[1]
-        norm2 = np.zeros(n)
-        for i in range(dim):  # sequential fold == F.aggregate order
-            norm2 = norm2 + m[:, i] * m[:, i]
-        norms = np.sqrt(norm2)
-        ids = pdf[id_col].to_numpy()
-        if not symmetric and (per_block_topk is not None or min_sim is not None):
-            if "__ck" in pdf.columns:
-                ca = int(pdf["__ca"].iloc[0])
-                cb = int(pdf["__cb"].iloc[0])
-                if ca == cb:
-                    # group (c,c) holds exactly chunk c's rows: the
-                    # plain triangle over the group IS the chunk's
-                    # within-chunk pairs
-                    return _gemm_pairs_topk(pdf, m, norms, n)
-                ck = pdf["__ck"].to_numpy()
-                return _gemm_pairs_topk(
-                    pdf,
-                    m,
-                    norms,
-                    n,
-                    a_idx=np.flatnonzero(ck == ca),
-                    b_idx=np.flatnonzero(ck == cb),
-                )
-            return _gemm_pairs_topk(pdf, m, norms, n)
-        if symmetric and per_query_topk is not None:
-            ia, ib = _gemm_query_candidates(m, norms, n)
-            out = pd.DataFrame(
-                {
-                    "id_a": ids[ia],
-                    "id_b": ids[ib],
-                    block_col: pdf[block_col].iloc[0],
-                    "sim": _exact_sims(m, norms, ia, ib),
-                }
-            )
-        else:
-            # full-pairs consumers: every sim is emitted, so the
-            # sequential fold runs over all pairs — no GEMM shortcut
-            ia, ib = np.triu_indices(n, 1)
-            out = pd.DataFrame(
-                {
-                    "id_a": ids[ia],
-                    "id_b": ids[ib],
-                    block_col: pdf[block_col].iloc[0],
-                    "sim": _exact_sims(m, norms, ia, ib),
-                }
-            )
-            if symmetric:
-                rev = out.rename(columns={"id_a": "id_b", "id_b": "id_a"})
-                out = pd.concat([out, rev[out.columns]], ignore_index=True)
-        if per_query_topk is not None and len(out):
-            # per-query prune under the consumer's total order
-            # (sim desc, id_b), with the 1e-6 rounding-boundary
-            # margin argued in the docstring. Vectorized: rank rows
-            # within each id_a group, broadcast each group's k-th
-            # raw sim, keep everything above (kth - margin); groups
-            # smaller than k have no k-th row and keep all rows.
-            out = out.sort_values(
-                ["id_a", "sim", "id_b"],
-                ascending=[True, False, True],
-                kind="mergesort",
-            ).reset_index(drop=True)
-            pos = out.groupby("id_a", sort=False).cumcount()
-            kth = (
-                out["sim"]
-                .where(pos == per_query_topk - 1)
-                .groupby(out["id_a"], sort=False)
-                .transform("max")
-            )
-            out = out[kth.isna() | (out["sim"] >= kth - 1e-6)]
-        if per_block_topk is not None and len(out) > per_block_topk:
-            # prune INSIDE the kernel with the identical total order
-            # the consumer's global top-k applies; sims are the
-            # already-computed doubles, untouched.
-            out = out.sort_values(
-                ["sim", "id_a", "id_b"],
-                ascending=[False, True, True],
-                kind="mergesort",
-            ).head(per_block_topk)
-        return out
-
-    if pre_chunked:
-        pairs = emb.groupBy(block_col, "__ca", "__cb").applyInPandas(
-            kernel, schema=out_schema
-        )
-    elif n_chunks is not None and n_chunks > 1 and not symmetric and (
-        per_block_topk is not None or min_sim is not None
-    ):
-        # Chunk-pair split (round 10): a block's kernel is one task,
-        # so stage parallelism is bounded by the number of BLOCKS —
-        # measured 9-10 busy cores of 32 through the whole sf100 q6
-        # kernel stage (10 labels). Deterministically chunk ids m
-        # ways and run one kernel task per unordered CHUNK PAIR
-        # ((c,c) = chunk triangle, (ca,cb) = bipartite): every
-        # unordered id pair lands in exactly one group, so min_sim
-        # output is IDENTICAL, and each group emits its own top-k
-        # plus margin ties — a superset of the block top-k (fewer
-        # competitors per group), which the consumer's global
-        # rounded-sim top-k trims to the identical final rows. Cost:
-        # the vector column is shuffled m times instead of once —
-        # pay it only when the GEMM dominates the exchange (the
-        # callers derive m from defaultParallelism; see
-        # sim_search_topk). GEMM flop count is unchanged.
-        mck = int(n_chunks)
-        ck = F.pmod(F.xxhash64(F.col(id_col)), F.lit(mck)).cast("int")
-        grps = F.array(
-            *[
-                F.struct(
-                    F.least(ck, F.lit(x)).alias("ca"),
-                    F.greatest(ck, F.lit(x)).alias("cb"),
-                )
-                for x in range(mck)
-            ]
-        )
-        src = (
-            emb.select(id_col, block_col, vec_col)
-            .withColumn("__ck", ck)
-            .withColumn("__g", F.explode(grps))
-            .select(
-                id_col,
-                block_col,
-                vec_col,
-                "__ck",
-                F.col("__g.ca").alias("__ca"),
-                F.col("__g.cb").alias("__cb"),
-            )
-        )
-        pairs = src.groupBy(block_col, "__ca", "__cb").applyInPandas(
-            kernel, schema=out_schema
-        )
-    else:
-        pairs = emb.select(id_col, block_col, vec_col).groupBy(block_col).applyInPandas(
-            kernel, schema=out_schema
-        )
-    sim_out = F.col("sim") if round_dp is None else F.round("sim", round_dp)
-    return pairs.select("id_a", "id_b", block_col, sim_out.alias("sim"))
-
-
-def blocked_l2_pairs(
-    emb: DataFrame,
-    max_dist: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str = "label",
-    n_chunks: int | None = None,
-) -> DataFrame:
-    """Unordered same-block pairs with exact Euclidean distance
-    <= ~max_dist — the L2 sibling of ``blocked_pairs(min_sim=...)``
-    (round 11, guide §4.2/§2.3). Columns: id_a, id_b, <block_col>,
-    l2 (rounded 6dp, the family's hashing lane).
-
-    Candidate selection runs as tiled GEMMs on the identity
-    ||a-b||^2 = ||a||^2 + ||b||^2 - 2 a.b (bounded memory at any
-    block size), cut at (max_dist + 1e-6)^2 + 1e-9 — the 1e-6 covers
-    the 6dp HALF_UP rounding boundary (a pair can round into the
-    consumer's ``l2 <= max_dist`` filter only if raw l2 <=
-    max_dist + 5e-7) and the 1e-9 d^2 slack dwarfs the < ~1e-10
-    float64 discrepancy between the GEMM identity and the direct
-    difference fold (both sum 64 exact float32-product terms; the
-    identity adds one subtraction of ~equal-magnitude sums).
-    Survivors are recomputed with the EXACT sequential fold the
-    oracle uses — loop over dimensions, acc + (a_i-b_i)^2, one final
-    sqrt — so every emitted double is bit-identical to DuckDB
-    list_sum + sqrt; a final margin filter keeps l2 <= max_dist +
-    1.01e-6 and the consumer's rounded filter decides. The Arrow
-    transfer drops from O(block^2) pair rows to the matches.
-
-    n_chunks: same unordered chunk-pair split as blocked_pairs —
-    every pair lands in exactly one group, so threshold output is
-    identical; derive from adaptive_chunks() so small corpora stay
-    one-task-per-block. Blocks never raise here: the tiled GEMM
-    bounds kernel memory, and a threshold consumer's output is the
-    matches, not the O(n^2) stream."""
-    id_type = emb.schema[id_col].dataType.simpleString()
-    blk_type = emb.schema[block_col].dataType.simpleString()
-    out_schema = (
-        f"id_a {id_type}, id_b {id_type}, {block_col} {blk_type}, l2 double"
-    )
-    _TILE = 2048
-    d2_cut = (max_dist + 1e-6) ** 2 + 1e-9
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], block_col: [], "l2": []})
-        m = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        n2 = np.einsum("ij,ij->i", m, m)
-        ia_l: list[np.ndarray] = []
-        ib_l: list[np.ndarray] = []
-
-        def _emit(d2, rows, cols, ordered):
-            keep = np.flatnonzero(d2.ravel() <= d2_cut)
-            if not len(keep):
-                return
+        met = met_cls(np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]))
+        ia_l, ib_l, g_l = [np.empty(0, np.intp)], [np.empty(0, np.intp)], [np.empty(0)]
+        for rows, cols, masked in tiles(pdf):
+            s = met.gemm(rows, cols)
+            if masked is not None:
+                s[masked] = np.nan
+            # cut the raw tile first; indices are built for survivors only
+            keep = np.flatnonzero(s >= floor(s, met.gemm_floor))
             qi, j = np.divmod(keep, len(cols))
-            ia, ib = rows[qi], cols[j]
-            if not ordered:
-                sw = ia > ib
-                ia, ib = np.where(sw, ib, ia), np.where(sw, ia, ib)
-            ia_l.append(ia)
-            ib_l.append(ib)
-
-        if "__ck" in pdf.columns and int(pdf["__ca"].iloc[0]) != int(
-            pdf["__cb"].iloc[0]
-        ):
-            ck = pdf["__ck"].to_numpy()
-            a_all = np.flatnonzero(ck == int(pdf["__ca"].iloc[0]))
-            b_all = np.flatnonzero(ck == int(pdf["__cb"].iloc[0]))
-            for i0 in range(0, len(a_all), _TILE):
-                at = a_all[i0 : i0 + _TILE]
-                for j0 in range(0, len(b_all), _TILE):
-                    bt = b_all[j0 : j0 + _TILE]
-                    d2 = n2[at][:, None] + n2[bt][None, :] - 2.0 * (m[at] @ m[bt].T)
-                    _emit(d2, at, bt, ordered=False)
-        else:
-            for i0 in range(0, n, _TILE):
-                rows = np.arange(i0, min(i0 + _TILE, n))
-                for j0 in range(i0, n, _TILE):
-                    cols = np.arange(j0, min(j0 + _TILE, n))
-                    d2 = (
-                        n2[rows][:, None]
-                        + n2[cols][None, :]
-                        - 2.0 * (m[rows] @ m[cols].T)
-                    )
-                    if i0 == j0:
-                        d2[np.tril_indices(d2.shape[0], 0, d2.shape[1])] = np.inf
-                    _emit(d2, rows, cols, ordered=True)
-        ia = np.concatenate(ia_l) if ia_l else np.array([], dtype=np.int64)
-        ib = np.concatenate(ib_l) if ib_l else np.array([], dtype=np.int64)
-        # exact re-rank: sequential difference fold == DuckDB list_sum
-        # (loop over dimensions, vectorize over pairs), one sqrt
-        acc = np.zeros(len(ia))
-        for i in range(m.shape[1]):
-            d = m[ia, i] - m[ib, i]
-            acc = acc + d * d
-        l2 = np.sqrt(acc)
-        keep = np.flatnonzero(l2 <= max_dist + 1.01e-6)
-        ia, ib, l2 = ia[keep], ib[keep], l2[keep]
+            ia_l.append(rows[qi])
+            ib_l.append(cols[j])
+            g_l.append(s.ravel()[keep])
+        ia, ib, g = np.concatenate(ia_l), np.concatenate(ib_l), np.concatenate(g_l)
+        if per_block_topk is not None:  # the group's GEMM cut across tiles
+            keep = np.flatnonzero(g >= floor(g, met.gemm_floor))
+            ia, ib = ia[keep], ib[keep]
+        if not symmetric:  # index order == id order on the sorted frame
+            ia, ib = np.minimum(ia, ib), np.maximum(ia, ib)
+        x = met.exact(ia, ib)
+        if per_query_topk is None:
+            cut = floor(x, met.exact_floor)
+        else:  # floor() per query, whose survivor counts differ
+            o = np.lexsort((-x, ia))
+            ia, ib, x = ia[o], ib[o], x[o]
+            lo, hi = np.searchsorted(ia, ia), np.searchsorted(ia, ia, "right")
+            kth = x[np.minimum(lo + k - 1, len(x) - 1)]
+            cut = np.where(hi - lo > k, met.exact_floor(kth), -np.inf)
+        keep = np.flatnonzero(x >= cut)
         ids = pdf[id_col].to_numpy()
         return pd.DataFrame(
             {
-                "id_a": ids[ia],
-                "id_b": ids[ib],
+                "id_a": ids[ia[keep]],
+                "id_b": ids[ib[keep]],
                 block_col: pdf[block_col].iloc[0],
-                "l2": l2,
+                met_cls.col: met_cls.sign * x[keep],
             }
         )
 
-    if n_chunks is not None and n_chunks > 1:
-        mck = int(n_chunks)
-        ck = F.pmod(F.xxhash64(F.col(id_col)), F.lit(mck)).cast("int")
-        grps = F.array(
-            *[
-                F.struct(
-                    F.least(ck, F.lit(x)).alias("ca"),
-                    F.greatest(ck, F.lit(x)).alias("cb"),
-                )
-                for x in range(mck)
-            ]
-        )
-        src = (
-            emb.select(id_col, block_col, vec_col)
-            .withColumn("__ck", ck)
-            .withColumn("__g", F.explode(grps))
-            .select(
-                id_col,
-                block_col,
-                vec_col,
-                "__ck",
-                F.col("__g.ca").alias("__ca"),
-                F.col("__g.cb").alias("__cb"),
-            )
-        )
-        pairs = src.groupBy(block_col, "__ca", "__cb").applyInPandas(
-            kernel, schema=out_schema
-        )
-    else:
-        pairs = (
-            emb.select(id_col, block_col, vec_col)
-            .groupBy(block_col)
-            .applyInPandas(kernel, schema=out_schema)
-        )
-    return pairs.select("id_a", "id_b", block_col, F.round("l2", 6).alias("l2"))
+    keys = [block_col] + (["__ca", "__cb"] if chunked else [])
+    cols = [id_col, block_col, vec_col] + (["__ck", "__ca", "__cb"] if chunked else [])
+    pairs = emb.select(*cols).groupBy(*keys).applyInPandas(kernel, schema=out_schema)
+    col = met_cls.col
+    val = F.col(col) if round_dp is None else F.round(col, round_dp)
+    return pairs.select("id_a", "id_b", block_col, val.alias(col))
 
 
 def ann_lsh_topk(

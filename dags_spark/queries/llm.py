@@ -25,7 +25,6 @@ from ..operators.similarity import (
     SQL_VEC_D,
     adaptive_chunks,
     ann_lsh_topk,
-    blocked_l2_pairs,
     blocked_pairs,
 )
 from ..registry import register
@@ -483,12 +482,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine >= threshold (0.4 exercises the path on the random fixture
     vectors; real near-dup corpora use ~0.95). Same Arrow kernel as
     sim_search_topk; at scale swap label blocking for LSH/IVF buckets."""
-    # min_sim pushes the threshold into the Arrow kernel (round 10):
-    # only pairs that can pass the rounded filter below are emitted
-    # (raw >= 0.4 - 1e-6), so the Arrow transfer carries the matches
-    # instead of O(block^2) rows; the filter on the rounded sims is
-    # unchanged and the final rows are identical (oracle-verified).
-    pairs = blocked_pairs(table(spark, sf_dir, "embeddings"), min_sim=0.4)
+    # threshold pushes the cut into the Arrow kernel: only pairs that
+    # can pass the rounded filter below are emitted (raw >= 0.4 - 1e-6),
+    # so the Arrow transfer carries the matches instead of O(block^2)
+    # rows; the filter on the rounded sims still decides.
+    pairs = blocked_pairs(table(spark, sf_dir, "embeddings"), threshold=0.4)
     return pairs.filter(F.col("sim") >= 0.4).select("id_a", "id_b", "label", "sim")
 
 
@@ -854,17 +852,21 @@ def sim_pairwise_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocked shape, sequential-fold arithmetic identical to the
     oracle's list_sum, so the raw doubles hash-match.
 
-    Round 11 (guide §4.2): the blocked JVM join evaluated an
-    interpreted 64-element zip_with+fold per PAIR (~200k pairs at
-    sf0.1) and shipped every pair through the filter. Candidates now
-    come from blocked_l2_pairs' tiled-GEMM prefilter
-    (||a-b||^2 = ||a||^2+||b||^2-2ab, margin-cut at the threshold),
-    survivors recomputed with the exact difference fold — emitted
-    doubles bit-identical (oracle-verified at sf0.001/0.01/0.1), and
-    the Arrow transfer is the matches, not O(block^2). The rounded
-    filter below is unchanged and takes the final decision."""
+    Candidates come from blocked_pairs' L2 metric: a tiled-GEMM
+    prefilter (||a-b||^2 = ||a||^2+||b||^2-2ab, margin-cut at the
+    threshold), survivors recomputed with the exact difference fold,
+    so the emitted doubles are the oracle's and the Arrow transfer is
+    the matches, not O(block^2). The rounded filter below takes the
+    final decision. max_block_rows=None: the output is the matches,
+    so blocks past the cap run (the sf10/sf100 tier labels do)."""
     emb = table(spark, sf_dir, "embeddings")
-    pairs = blocked_l2_pairs(emb, max_dist=1.2, n_chunks=adaptive_chunks(emb))
+    pairs = blocked_pairs(
+        emb,
+        metric="l2",
+        threshold=1.2,
+        max_block_rows=None,
+        n_chunks=adaptive_chunks(emb),
+    )
     return pairs.select("id_a", "id_b", "label", "l2").filter(
         F.col("l2") <= 1.2
     )
@@ -1114,7 +1116,7 @@ def dedup_embedding_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage truncation."""
     from ..operators.dedup import connected_components
 
-    pairs = blocked_pairs(table(spark, sf_dir, "embeddings"), min_sim=0.4).filter(
+    pairs = blocked_pairs(table(spark, sf_dir, "embeddings"), threshold=0.4).filter(
         F.col("sim") >= 0.4
     )
     return connected_components(
@@ -1605,7 +1607,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import connected_components
 
     emb = table(spark, sf_dir, "embeddings")
-    pairs = blocked_pairs(emb, min_sim=0.4).filter(F.col("sim") >= 0.4)
+    pairs = blocked_pairs(emb, threshold=0.4).filter(F.col("sim") >= 0.4)
     comp = connected_components(pairs.select("id_a", "id_b"))
     dropped = comp.filter(F.col("component") < F.col("id")).select(
         F.col("id").alias("vec_id")
@@ -4805,16 +4807,13 @@ def sim_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     are BLOCKED equi-joins — within by label, cross by residue —
     never all-pairs.
 
-    Round 11 (guide §4.2): both pair sets previously paid an
-    interpreted 64-element JVM fold per PAIR (~280k folds at sf0.1).
-    Raw cosines now come from the blocked_pairs Arrow kernel
+    Raw cosines come from the blocked_pairs Arrow kernel
     (round_dp=None — this key quantizes on its own 1e-9 lattice):
-    the within set is the kernel's full-pairs triangle per label,
-    the cross set rides the kernel's bipartite branch (pre_chunked)
-    with block key (label-edge, residue) and the two labels as the
-    "chunk" sides, min_sim=-2 so every pair is emitted. The kernel's
-    sequential fold is the same arithmetic as the old zip_with fold,
-    so the floor(round(.,9)*1e9) quantization below sees bit-identical
+    the within set is the kernel's all-pairs triangle per label, the
+    cross set its bipartite pairing — block key (label-edge,
+    residue), the two labels as the __ca/__cb chunk sides. The
+    kernel's sequential fold is the oracle's list_sum arithmetic, so
+    the floor(round(.,9)*1e9) quantization below sees bit-identical
     doubles (oracle-verified at sf0.001/0.01/0.1); pair ORDER within
     a pair is irrelevant (cosine is symmetric, the label comes from
     the block key)."""
@@ -4847,13 +4846,7 @@ def sim_label_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__ca", F.lit(0))
         .withColumn("__cb", F.lit(1))
     )
-    cross = blocked_pairs(
-        frame,
-        block_col="__blk",
-        min_sim=-2.0,
-        round_dp=None,
-        pre_chunked=True,
-    ).select(
+    cross = blocked_pairs(frame, block_col="__blk", round_dp=None).select(
         (F.col("__blk") / 5).cast("int").alias("label"),
         cos_nano.alias("cos_nano"),
     )

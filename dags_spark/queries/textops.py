@@ -190,7 +190,7 @@ def text_pipeline_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     faithful for any lang of <= 8 ASCII bytes; the documents schema
     pins lang to 2-char ISO 639-1 codes.
 
-    Measured (tools/ab_r10.py, old and new INTERLEAVED in one session,
+    Measured (old and new INTERLEAVED in one session,
     min/median of 7 at sf0.1, of 3 at the sf10 tier): sf0.1 min
     0.301 -> 0.287 s, median 0.402 -> 0.346 s; sf10 statistically a
     tie (min 1.83 vs 1.91 s) because the interpreted quality filter

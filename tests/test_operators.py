@@ -861,42 +861,38 @@ def test_ebml_webm_walker_and_integrity():
 
 
 def test_blocked_pairs_tiled_topk_matches_fold_path(spark):
-    """The over-cap tiled-GEMM top-k path must select exactly the
-    pairs the in-cap fold path selects (same total order), with sims
-    equal to the 6dp rounding both consumers apply."""
-    import numpy as np
+    """per_block_topk over blocks past max_block_rows (the tiled-GEMM
+    prune, which ignores the cap) must yield the same per-label top-40
+    under (sim desc, id_a, id_b) as the unpruned all-pairs output,
+    where every pair's sim is the exact fold."""
+    import math
+
+    import pytest as _pytest
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
 
     from dags_spark.operators.similarity import blocked_pairs
-
-    import math
 
     rows = []
     for i in range(600):
         # smooth irrational-step pattern: no duplicate vectors, no
-        # structured sim ties, so the two paths' last-ulp differences
-        # cannot legitimately reorder the top-k
+        # structured sim ties
         v = [math.sin(i * 1.7 + j * 0.9) + 0.01 * i for j in range(16)]
         rows.append((i, "L" if i % 2 else "R", v))
     df = spark.createDataFrame(rows, "vec_id INT, label STRING, embedding ARRAY<DOUBLE>")
 
-    fold = (
-        blocked_pairs(df, per_block_topk=40, max_block_rows=8192)
-        .orderBy("label", "id_a", "id_b")
-        .collect()
-    )
-    tiled = (
-        blocked_pairs(df, per_block_topk=40, max_block_rows=128)
-        .orderBy("label", "id_a", "id_b")
-        .collect()
-    )
-    assert [(r.id_a, r.id_b, r.label) for r in tiled] == [
-        (r.id_a, r.id_b, r.label) for r in fold
-    ]
-    assert all(abs(a.sim - b.sim) < 5e-7 for a, b in zip(tiled, fold))
+    def top40(pairs):
+        w = Window.partitionBy("label").orderBy(F.col("sim").desc(), "id_a", "id_b")
+        ranked = pairs.withColumn("r", F.row_number().over(w)).filter("r <= 40")
+        return sorted((r.label, r.id_a, r.id_b, r.sim) for r in ranked.collect())
+
+    pruned = blocked_pairs(df, per_block_topk=40, max_block_rows=128)
+    full = blocked_pairs(df, max_block_rows=8192)
+    assert full.count() == 2 * (300 * 299 // 2)
+    got = top40(pruned)
+    assert len(got) == 80 and got == top40(full)
 
     # all-pairs consumers (no topk) must still refuse over-cap blocks
-    import pytest as _pytest
-
     with _pytest.raises(Exception, match="max_block_rows"):
         blocked_pairs(df, max_block_rows=128).collect()
 

@@ -1,7 +1,9 @@
-"""Round-10 chunk-pair split of blocked_pairs: the chunked kernel must
-be output-equivalent to the unchunked one at the consumer level, and
-the masked-diagonal cut must never resurrect self-pairs (the -inf
-k-th edge when a tile holds fewer than k real pairs)."""
+"""Chunk-pair split of blocked_pairs: the chunked kernel must be
+output-equivalent to the unchunked one at the consumer level, for
+both metrics; the L2 threshold must keep every pair its rounded
+filter passes at the margin edge; and the masked-diagonal cut must
+never resurrect self-pairs (the k-th edge when a tile holds fewer
+than k real pairs)."""
 
 from __future__ import annotations
 
@@ -32,27 +34,57 @@ def test_chunked_topk_equals_unchunked(emb, m):
     assert base.equals(chunked)
 
 
-def test_chunked_min_sim_identical_pair_set(emb):
-    base = (
-        blocked_pairs(emb, min_sim=0.4)
-        .filter(F.col("sim") >= 0.4)
-        .toPandas()
-        .sort_values(["id_a", "id_b"])
-        .reset_index(drop=True)
-    )
-    chunked = (
-        blocked_pairs(emb, min_sim=0.4, n_chunks=3)
-        .filter(F.col("sim") >= 0.4)
-        .toPandas()
-        .sort_values(["id_a", "id_b"])
-        .reset_index(drop=True)
-    )
-    assert base.equals(chunked)
+@pytest.mark.parametrize(
+    "metric, t, m",
+    [
+        pytest.param("cosine", 0.4, 3, id="cosine-3"),
+        pytest.param("l2", 1.2, 2, id="l2-2"),
+        pytest.param("l2", 1.2, 3, id="l2-3"),
+    ],
+)
+def test_chunked_threshold_identical_pair_set(emb, metric, t, m):
+    col = "sim" if metric == "cosine" else "l2"
+    passes = F.col(col) >= t if metric == "cosine" else F.col(col) <= t
+
+    def pair_set(n_chunks):
+        out = blocked_pairs(emb, metric=metric, threshold=t, n_chunks=n_chunks)
+        return (
+            out.filter(passes)
+            .toPandas()
+            .sort_values(["id_a", "id_b"])
+            .reset_index(drop=True)
+        )
+
+    base = pair_set(None)
+    assert len(base)
+    assert base.equals(pair_set(m))
+
+
+def test_l2_threshold_margin_edge(spark):
+    """Pairs at float32 distances 1.2-3e-7, 1.2+4e-7 and 1.2+6e-7:
+    the first two round (6dp HALF_UP) to 1.2 and must pass the
+    consumer's ``l2 <= 1.2`` filter, the third rounds to 1.200001 and
+    must not. The pairs sit far from the origin so the GEMM identity
+    ||a||^2 + ||b||^2 - 2ab cancels large terms at the cut."""
+    import numpy as np
+
+    rows = []
+    for i, d in enumerate((1.2 - 3e-7, 1.2 + 4e-7, 1.2 + 6e-7)):
+        a = np.zeros(8, dtype=np.float32)
+        a[1], a[2] = 4.0, 100.0 * (i + 1)
+        b = a.copy()
+        b[0] = np.float32(d)
+        assert abs(float(np.linalg.norm(b.astype(np.float64) - a)) - d) < 5e-8
+        rows += [(2 * i, "x", a.tolist()), (2 * i + 1, "x", b.tolist())]
+    df = spark.createDataFrame(rows, "vec_id long, label string, embedding array<float>")
+    out = blocked_pairs(df, metric="l2", threshold=1.2, max_block_rows=None)
+    got = {(r.id_a, r.id_b): r.l2 for r in out.filter(F.col("l2") <= 1.2).collect()}
+    assert got == {(0, 1): 1.2, (2, 3): 1.2}
 
 
 def test_no_self_pairs_when_tiles_smaller_than_k(spark):
     """Chunked tiny blocks: every (c,c) tile holds far fewer than k
-    pairs, so the per-tile k-th cut lands on a -inf mask cell — the
+    pairs, so the per-tile k-th cut lands on a mask cell — the
     regression this pins is those cells surviving the cut and coming
     back from the exact recompute as sim=1.0 self-pairs."""
     rows = [(i, "x", [float((i * 7 + j) % 5) for j in range(8)]) for i in range(12)]

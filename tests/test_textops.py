@@ -243,7 +243,8 @@ def test_ngram_jaccard_df_ceiling_prunes_hot_grams(spark):
 
 def test_blocked_pairs_hot_block_guard(spark):
     """A block exceeding max_block_rows must fail loudly, not run the
-    O(n^2) kernel."""
+    O(n^2) kernel — for every selection except per_block_topk, unless
+    the caller lifts the cap."""
     import pytest as _pytest
 
     rows = [(i, [float(i), 1.0], "hot") for i in range(20)]
@@ -252,8 +253,19 @@ def test_blocked_pairs_hot_block_guard(spark):
     )
     with _pytest.raises(Exception, match="max_block_rows"):
         blocked_pairs(emb, max_block_rows=10).collect()
+    # a cosine threshold selection is no exception
+    with _pytest.raises(Exception, match="max_block_rows"):
+        blocked_pairs(emb, threshold=0.5, max_block_rows=10).collect()
     # same data passes when the guard is sized for it
     assert blocked_pairs(emb, max_block_rows=32).count() == 20 * 19 // 2
+    # the L2 threshold runs over-cap blocks when the cap is lifted:
+    # points (i, 1) are |i - j| apart, so 19 neighbours are <= 1.0
+    l2 = blocked_pairs(emb, metric="l2", threshold=1.0, max_block_rows=None)
+    assert l2.filter("l2 <= 1.0").count() == 19
+    # combinations no caller uses are rejected while the plan is built
+    for bad in ({"symmetric": True, "per_block_topk": 5}, {"per_query_topk": 5}):
+        with _pytest.raises(ValueError, match="blocked_pairs"):
+            blocked_pairs(emb, **bad)
 
 
 @pytest.mark.slow
