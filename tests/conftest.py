@@ -12,12 +12,18 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from dags_spark.registry import all_specs  # noqa: E402
 from dags_spark.session import get_spark  # noqa: E402
 from dags_spark.testing import duck_connect  # noqa: E402
 
 # Small SF for unit tests; tools/check.py covers sf0.01 (the driver's
 # t2 scale) and the driver itself is the final gate.
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+
+
+def run_key(spark, key):
+    """Run one registered key at the test SF and return its rows."""
+    return all_specs()[key].fn(spark, SF_DIR).toPandas()
 
 
 @contextmanager

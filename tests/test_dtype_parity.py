@@ -1,59 +1,10 @@
-"""Schema-family parity sweep: for every hash key, the Spark result
-schema (lazy analysis — no execution) must agree with the DuckDB
-oracle's pandas dtypes on numeric family (int vs float vs bool vs
-timestamp). DuckDB returns HUGEINT for integer SUMs (pandas float64)
-and TINYINT for sign(); Spark returns int64 — values compare equal
-element-wise but the driver's value-hash differs, which is exactly how
-the round-2 hash mismatches happened. This test makes the class
-unrepresentable: a new key with an un-CAST integer aggregate fails
-here in seconds, not in the next round's CORRECTNESS file."""
+"""Dtype-family guards below the per-key check in test_correctness.py:
+the nested value-family signatures `compare` uses, and the type-text
+parsers of tools/dtype_sweep.py. DuckDB returns HUGEINT for integer
+SUMs (pandas float64) while Spark returns int64: values compare equal
+element-wise but the driver's value-hash differs."""
 
 from __future__ import annotations
-
-import pytest
-
-from dags_spark.registry import all_specs
-
-
-def _family(t: str) -> str:
-    t = t.lower()
-    if "int" in t and "interval" not in t:
-        return "int"
-    if any(x in t for x in ("float", "double", "decimal")):
-        return "float"
-    if "bool" in t:
-        return "bool"
-    if any(x in t for x in ("timestamp", "datetime")):
-        return "ts"
-    if "date" in t:
-        return "date"
-    return "other"
-
-
-@pytest.mark.slow
-def test_hash_key_dtype_families_match_oracle(spark, duck, sf_dir):
-    problems = []
-    for name, spec in all_specs().items():
-        if spec.check != "hash" or spec.oracle is None:
-            continue
-        if spec.module == "streaming":
-            continue  # running the stream just for a schema is wasteful
-        s_schema = {
-            f.name: f.dataType.simpleString()
-            for f in spec.fn(spark, sf_dir).schema.fields
-        }
-        d = duck.execute(f"SELECT * FROM ({spec.oracle}) LIMIT 0").df()
-        d_schema = {c: str(t) for c, t in d.dtypes.items()}
-        if sorted(s_schema) != sorted(d_schema):
-            problems.append((name, "columns", sorted(s_schema), sorted(d_schema)))
-            continue
-        for c in s_schema:
-            sf_, df_ = _family(s_schema[c]), _family(d_schema[c])
-            if "other" in (sf_, df_):
-                continue
-            if sf_ != df_:
-                problems.append((name, c, s_schema[c], d_schema[c]))
-    assert not problems, f"dtype-family drift: {problems}"
 
 
 def test_nested_family_signatures():

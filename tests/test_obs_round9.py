@@ -5,17 +5,11 @@ from __future__ import annotations
 
 import math
 
-from dags_spark.registry import all_specs
-
-from .conftest import SF_DIR
-
-
-def _run(spark, key):
-    return all_specs()[key].fn(spark, SF_DIR).toPandas()
+from .conftest import run_key
 
 
 def test_kadane_matches_bruteforce(spark, duck):
-    got = _run(spark, "win_max_subarray_kadane").set_index("brand")
+    got = run_key(spark, "win_max_subarray_kadane").set_index("brand")
     cells = duck.execute(
         "SELECT p.p_brand AS brand, date_trunc('month', o.o_orderdate) AS m,"
         " SUM(CAST(ROUND(l.l_extendedprice*100,0) AS BIGINT)"
@@ -42,7 +36,7 @@ def test_kadane_matches_bruteforce(spark, duck):
 def test_ddsketch_within_relative_error(spark, duck):
     """The DDSketch contract: every estimate within 1% RELATIVE error
     of the true quantile (rank floor(q*(n-1))+1 of the sorted values)."""
-    got = _run(spark, "agg_ddsketch_quantile")
+    got = run_key(spark, "agg_ddsketch_quantile")
     vals = sorted(
         r[0] for r in duck.execute("SELECT o_totalprice FROM orders").fetchall()
     )
@@ -56,7 +50,7 @@ def test_ddsketch_within_relative_error(spark, duck):
 def test_histogram_quantile_interpolation(spark, duck):
     """PromQL semantics: the estimate sits inside its bucket's bounds,
     and the crossing bucket is the first with cum >= 0.95*N."""
-    got = _run(spark, "obs_histogram_quantile")
+    got = run_key(spark, "obs_histogram_quantile")
     le = [5.0, 10.0, 25.0, 50.0, 100.0, 250.0, 500.0]
     rows = duck.execute(
         "SELECT event_type, value FROM events"
@@ -86,7 +80,7 @@ def test_histogram_quantile_interpolation(spark, duck):
 
 
 def test_apdex_range_and_bruteforce(spark, duck):
-    got = _run(spark, "obs_apdex_score")
+    got = run_key(spark, "obs_apdex_score")
     ref = duck.execute(
         "SELECT event_type, COUNT(*) AS n,"
         " SUM(CASE WHEN value <= 50 THEN 1 ELSE 0 END) AS s,"
@@ -103,7 +97,7 @@ def test_apdex_range_and_bruteforce(spark, duck):
 def test_error_budget_burn_windows(spark, duck):
     """The 6h rolling side must equal the sum of the service's hourly
     counts within [t-5h, t] — spot-check the hottest rows."""
-    got = _run(spark, "obs_error_budget_burn")
+    got = run_key(spark, "obs_error_budget_burn")
     hourly = duck.execute(
         "SELECT event_type AS service, date_trunc('hour', ts) AS hb,"
         " COUNT(*) AS n, SUM(CASE WHEN value > 250 THEN 1 ELSE 0 END) AS e"
@@ -121,7 +115,7 @@ def test_error_budget_burn_windows(spark, duck):
 
 
 def test_ulcer_index_bruteforce(spark, duck):
-    got = _run(spark, "win_ulcer_index").set_index("brand")
+    got = run_key(spark, "win_ulcer_index").set_index("brand")
     cells = duck.execute(
         "SELECT p.p_brand AS brand, date_trunc('month', o.o_orderdate) AS m,"
         " SUM(CAST(ROUND(l.l_extendedprice*100,0) AS BIGINT)"

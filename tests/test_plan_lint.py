@@ -1,153 +1,12 @@
-"""Whole-surface plan-lint sweep: every registered batch query's
-physical plan must be free of scale anti-patterns (cartesian joins,
-single-partition exchanges, row-wise Python UDFs) except where the
-key's semantics REQUIRE the construct — those are allowlisted here,
-each with the reason. A refactor that silently degrades any plan
-fails this test, not the cluster."""
+"""Plan-linter self-tests: deliberately bad plans trip each finding
+code, proven-bounded shapes stay clean, and the two-pass global
+operators the linter steers keys onto match their single-window
+equivalents. The per-key lint of every registered batch query is in
+test_correctness.py."""
 
 from __future__ import annotations
 
-import pytest
-
 from dags_spark.plans import lint_plan
-from dags_spark.registry import all_specs
-
-# key -> allowed finding codes, with the reason the construct is fine.
-#
-# Round 8 second pass (VERDICT r7 directive #3, continued): the
-# linter now proves GROUPED aggregates bounded when every grouping
-# key is a calendar-grain expression (cardinality follows the data's
-# TIME SPAN, not its volume), a literal modulus (pmod/%/ntile), the
-# partition-id / reserved __pid/__bkt two-pass-rewrite attributes, or
-# an all-literal CASE — see the key-cardinality algebra in
-# plans/lint.py. That cleared the calendar folds (ts_*/win_* daily
-# series), the two-pass rank-offset tables (sort_multi,
-# train_curriculum_buckets, pack_sequences_greedy, ...), and the
-# literal-CASE contingency grids (cohens_kappa, runs_test,
-# mann_kendall, spc, and the datediff day-index folds once the
-# resolver learned datediff + literal-shift), and EIGHTEEN data-grain
-# funnels were REWRITTEN onto the two-pass machinery (abc
-# classification, exact AUC, KS and Mann-Whitney ECDF grids, join-key
-# skew, top-n-with-ties, percent-of-total, the Lorenz/WOE/lift-chart
-# deciles and RFM quintiles via the new global_ntile operator — whose
-# least/greatest clamp makes even the post-NTILE grid provable — RRF
-# rank fusion, time-to-convert percentiles, Weibull plotting ranks,
-# balanced shard packing, the id-density gap scan, the
-# peak-concurrency sweep line via the new global_running_sum)
-# — 48 fewer waivers than round 8's first pass (78 -> 29, and 28
-# in round 9 once stats_bh_fdr migrated onto global_running_min; the
-# literal Range/explode(sequence) grid rule cleared the periodogram
-# and the bootstrap key entirely; the PSI log2 grid cleared once
-# the clamp landed and the splitter stopped reading comparison
-# operators as type brackets). What
-# remains is argued per block below.
-ALLOWED = {
-    # -- cartesian: genuine crosses and unprovable grids --
-    # join_cross's semantics ARE cartesian; point-in-polygon /
-    # MMR / DTW / Hurst / Croston cross candidate pairs or
-    # series-pair grids that are small by construction (per-type
-    # series, polygon candidate buckets) but not by plan structure;
-    # shapley crosses the 2^k coalition grid (k<=3 channels);
-    # heaps'/levenshtein/rules-as-data cross vocab/rule grids whose
-    # cardinality follows distinct DATA values. The fact side never
-    # re-shuffles in any of them.
-    "agg_histogram_percentile": {"cartesian", "single-partition-exchange"},
-    "attribution_shapley": {"cartesian"},
-    "dq_rules_as_data": {"cartesian"},
-    "fn_levenshtein_threshold": {"cartesian"},
-    "join_cross": {"cartesian"},
-    "join_geo_point_in_polygon": {"cartesian"},
-    "sim_mmr_diversify": {"cartesian"},
-    "stats_sen_slope": {"cartesian"},
-    "text_heaps_law": {"cartesian"},
-    "ts_croston_intermittent": {"cartesian"},
-    "ts_dtw_distance": {"cartesian"},
-    "ts_hurst_rs": {"cartesian"},
-    # round 9: matrix-profile pairs the subsequence grid with itself
-    # under the exclusion-zone range condition — quadratic BY
-    # CONTRACT on a calendar-grain axis (~350 weeks at any corpus
-    # volume: adding rows fattens weekly counts, not the grid);
-    # decontaminate_embedding broadcast-crosses the train stream
-    # with the BENCHMARK side, small by construction (eval suites
-    # are 1e3-1e5 docs) — the train side never shuffles, which is
-    # exactly the 100 TB plan.
-    "ts_matrix_profile_motif": {"cartesian"},
-    "decontaminate_embedding": {"cartesian"},
-    #
-    # (round 9: stats_bh_fdr's single-partition-exchange waiver —
-    # the last one standing alone — cleared by REAL rewrite: the BH
-    # ladder now runs on global_rank + the new global_running_min
-    # called in descending order for the step-up suffix min.
-    # agg_histogram_percentile above retains its argued pair: its
-    # interpolation grid is the cartesian the docstring defends.)
-    #
-    # -- global-sort: ORDER BY is the key's output contract --
-    # Sorted final output is the declared semantics (TPC-H answer
-    # ordering, ranked fusion/sampling lists); the sort runs on the
-    # post-aggregate grain, orders of magnitude below the fact scan.
-    "agg_hll_sketch_union": {"global-sort"},
-    "agg_regr_linear": {"global-sort"},
-    "sample_temperature_mix": {"global-sort"},
-    "sim_matryoshka_overlap": {"global-sort"},
-    "tpch_q13_order_counts": {"global-sort"},
-    "tpch_q22_sales_opportunity": {"global-sort"},
-    "tpch_q5_local_supplier": {"global-sort"},
-    "tpch_q7_volume_shipping": {"global-sort"},
-    "tpch_q8_market_share": {"global-sort"},
-    # 
-    # -- unpruned-partition-scan: whole-layout maintenance reads --
-    # These keys' PURPOSE is reading every partition (file-metadata
-    # inventory, dynamic-overwrite verification read-back, the custom
-    # stream source's full-directory snapshot).
-    "scan_file_metadata": {"unpruned-partition-scan"},
-    "sink_partition_overwrite_dynamic": {"unpruned-partition-scan"},
-    "source_python_bus_partitioned": {"unpruned-partition-scan"},
-    "source_python_datasource_stream": {"unpruned-partition-scan"},
-    # 
-    # -- rowwise-python-udf: API-coverage keys --
-    # The four keys whose purpose IS the row-wise Python UDF/UDTF
-    # API surface; everything else is linter-banned from it.
-    "udf_python_scalar": {"rowwise-python-udf"},
-    "udtf_analyze_polymorphic": {"rowwise-python-udf"},
-    "udtf_partition_by": {"rowwise-python-udf"},
-    "udtf_python": {"rowwise-python-udf"},
-}
-
-
-def _batch_specs():
-    return [
-        (name, spec)
-        for name, spec in all_specs().items()
-        if spec.module != "streaming"
-    ]
-
-
-@pytest.mark.slow
-def test_every_batch_plan_is_lint_clean(spark, sf_dir):
-    """Also enforces: hash-checked keys emit only atomic columns —
-    the external driver's canonicalizer cannot sort/hash array/map/
-    struct/binary cells (the round-1 agg_collect_sorted failure);
-    serialize with array_join/concat_ws instead."""
-    from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
-
-    violations = {}
-    for name, spec in _batch_specs():
-        df = spec.fn(spark, sf_dir)
-        findings = lint_plan(df)
-        bad = [
-            (f.code, f.node)
-            for f in findings
-            if f.code not in ALLOWED.get(name, set())
-        ]
-        if spec.check == "hash":
-            bad += [
-                ("non-atomic-column", f.name)
-                for f in df.schema.fields
-                if isinstance(f.dataType, (ArrayType, MapType, StructType, BinaryType))
-            ]
-        if bad:
-            violations[name] = bad
-    assert not violations, f"plan lint violations: {violations}"
 
 
 def test_lint_catches_cartesian_and_single_partition(spark, sf_dir):

@@ -11,13 +11,7 @@ import math
 
 import numpy as np
 
-from dags_spark.registry import all_specs
-
-from .conftest import SF_DIR
-
-
-def _run(spark, key):
-    return all_specs()[key].fn(spark, SF_DIR).toPandas()
+from .conftest import run_key
 
 
 def _semver_key(v: str):
@@ -31,7 +25,7 @@ def _semver_key(v: str):
 
 
 def test_semver_rank_matches_spec_sort(spark, duck):
-    got = _run(spark, "fn_semver_compare")
+    got = run_key(spark, "fn_semver_compare")
     parts = duck.execute(
         "SELECT p_partkey, p_brand FROM part"
     ).df().set_index("p_partkey")
@@ -57,7 +51,7 @@ def test_semver_rank_matches_spec_sort(spark, duck):
 
 
 def test_cron_next_fire_matches_datetime_walk(spark, duck):
-    got = _run(spark, "fn_cron_next_fire").set_index("o_orderkey")
+    got = run_key(spark, "fn_cron_next_fire").set_index("o_orderkey")
     rows = duck.execute(
         "SELECT o_orderkey, o_orderdate FROM orders ORDER BY o_orderkey LIMIT 500"
     ).fetchall()
@@ -80,7 +74,7 @@ def test_cron_next_fire_matches_datetime_walk(spark, duck):
 
 
 def test_dft_bin_energy_matches_numpy_fft(spark):
-    got = _run(spark, "multimodal_dft_bin_energy")
+    got = run_key(spark, "multimodal_dft_bin_energy")
     sample = got[got["doc_id"] < 20]
     assert len(sample) >= 3
     for _, r in sample.iterrows():
@@ -95,7 +89,7 @@ def test_dft_bin_energy_matches_numpy_fft(spark):
 
 
 def test_closeness_matches_python_bfs(spark, duck):
-    got = _run(spark, "iter_closeness_centrality").set_index("seed")
+    got = run_key(spark, "iter_closeness_centrality").set_index("seed")
     n = duck.execute("SELECT COUNT(*) FROM customer").fetchone()[0]
     keys = [r[0] for r in duck.execute("SELECT c_custkey FROM customer").fetchall()]
     edges = {k: (k * 37 + 11) % n for k in keys}
@@ -118,7 +112,7 @@ def test_closeness_matches_python_bfs(spark, duck):
 
 
 def test_matrix_profile_matches_bruteforce(spark, duck):
-    got = _run(spark, "ts_matrix_profile_motif")
+    got = run_key(spark, "ts_matrix_profile_motif")
     wk = duck.execute(
         "SELECT date_trunc('week', o_orderdate) AS w, COUNT(*) AS c"
         " FROM orders GROUP BY w ORDER BY w"
@@ -141,7 +135,7 @@ def test_matrix_profile_matches_bruteforce(spark, duck):
 
 
 def test_decontaminate_embedding_matches_numpy(spark, duck):
-    got = _run(spark, "decontaminate_embedding").set_index("vec_id")
+    got = run_key(spark, "decontaminate_embedding").set_index("vec_id")
     rows = duck.execute("SELECT vec_id, embedding FROM embeddings").fetchall()
     vecs = {r[0]: np.array(r[1], dtype=np.float64) for r in rows}
     bench = {k: v for k, v in vecs.items() if k % 50 == 0}

@@ -9,17 +9,11 @@ from __future__ import annotations
 import math
 from collections import Counter
 
-from dags_spark.registry import all_specs
-
-from .conftest import SF_DIR
-
-
-def _run(spark, key):
-    return all_specs()[key].fn(spark, SF_DIR).toPandas()
+from .conftest import SF_DIR, run_key
 
 
 def test_isotonic_pava_matches_sequential_pava(spark):
-    out = _run(spark, "stats_isotonic_pava").sort_values("bin")
+    out = run_key(spark, "stats_isotonic_pava").sort_values("bin")
     # monotone non-decreasing by construction of the minimax formula
     iso = list(out["y_iso"])
     assert all(a <= b + 1e-12 for a, b in zip(iso, iso[1:]))
@@ -54,7 +48,7 @@ def test_isotonic_pava_matches_sequential_pava(spark):
 
 
 def test_pass_at_k_exact_combinatorics(spark):
-    out = _run(spark, "eval_pass_at_k")
+    out = run_key(spark, "eval_pass_at_k")
     for r in out.itertuples():
         n, c, p = int(r.n_samples), int(r.n_correct), float(r.pass_at_5)
         assert 0.0 <= p <= 1.0
@@ -63,7 +57,7 @@ def test_pass_at_k_exact_combinatorics(spark):
 
 
 def test_bleu_matches_reference_impl(spark, duck):
-    out = _run(spark, "text_bleu_score").set_index("doc_id")
+    out = run_key(spark, "text_bleu_score").set_index("doc_id")
     docs = dict(
         duck.execute(
             f"SELECT doc_id, text FROM read_parquet('{SF_DIR}/documents.parquet')"
@@ -92,7 +86,7 @@ def test_bleu_matches_reference_impl(spark, duck):
 
 
 def test_rouge_bounds_and_f1_consistency(spark):
-    out = _run(spark, "text_rouge_n")
+    out = run_key(spark, "text_rouge_n")
     for r in out.itertuples():
         p, rr, f = float(r.rouge1_p), float(r.rouge1_r), float(r.rouge1_f)
         assert 0.0 <= p <= 1.0 and 0.0 <= rr <= 1.0
@@ -102,13 +96,13 @@ def test_rouge_bounds_and_f1_consistency(spark):
 
 
 def test_quoted_printable_roundtrip_and_census(spark):
-    out = _run(spark, "fn_quoted_printable")
+    out = run_key(spark, "fn_quoted_printable")
     assert out["roundtrip_ok"].all()
     assert (out["n_escaped"] >= 0).all()
 
 
 def test_ohlc_invariants(spark):
-    out = _run(spark, "ts_ohlc_bars")
+    out = run_key(spark, "ts_ohlc_bars")
     assert (out["high_c"] >= out["low_c"]).all()
     assert (out["high_c"] >= out["open_c"]).all()
     assert (out["high_c"] >= out["close_c"]).all()
@@ -118,7 +112,7 @@ def test_ohlc_invariants(spark):
 
 
 def test_snowflake_roundtrip(spark):
-    out = _run(spark, "fn_snowflake_id_decode")
+    out = run_key(spark, "fn_snowflake_id_decode")
     assert out["roundtrip_ok"].all()
     assert (out["dec_datacenter"] < 32).all()
     assert (out["dec_worker"] < 32).all()
@@ -140,7 +134,7 @@ def test_pinball_loss_quantile_optimality(spark, duck):
         SELECT l_returnflag, list(cents) FROM train GROUP BY l_returnflag
         """
     ).fetchall()
-    out = _run(spark, "stats_pinball_loss").set_index("l_returnflag")
+    out = run_key(spark, "stats_pinball_loss").set_index("l_returnflag")
 
     def pin(vals, qv, tau):
         return sum(

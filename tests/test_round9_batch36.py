@@ -13,13 +13,7 @@ from dags_spark.operators.punycode import (
     punycode_decode,
     punycode_encode,
 )
-from dags_spark.registry import all_specs
-
-from .conftest import SF_DIR
-
-
-def _run(spark, key):
-    return all_specs()[key].fn(spark, SF_DIR).toPandas()
+from .conftest import SF_DIR, run_key
 
 
 def test_punycode_matches_cpython_codec():
@@ -51,7 +45,7 @@ def test_punycode_rejects_malformed():
 
 
 def test_ppr_mass_properties(spark):
-    out = _run(spark, "iter_ppr_restart")
+    out = run_key(spark, "iter_ppr_restart")
     total = out["mass"].sum()
     # sub-stochastic: total mass can only leak (dangling absorption),
     # never exceed 1
@@ -61,7 +55,7 @@ def test_ppr_mass_properties(spark):
 
 
 def test_poisson_bootstrap_weight_census(spark):
-    out = _run(spark, "sample_poisson_bootstrap")
+    out = run_key(spark, "sample_poisson_bootstrap")
     # Poisson(1): E[sum k] = n per replicate -> n_eff within 5% of
     # the true group size, and the three replicates must differ
     import duckdb
@@ -81,7 +75,7 @@ def test_poisson_bootstrap_weight_census(spark):
 
 
 def test_theta_ses_closed_form_matches_recursion(spark, duck):
-    out = _run(spark, "ts_theta_method").set_index("flag")
+    out = run_key(spark, "ts_theta_method").set_index("flag")
     series = duck.execute(
         """
         WITH m AS (
@@ -121,7 +115,7 @@ def test_theta_ses_closed_form_matches_recursion(spark, duck):
 
 
 def test_by_adjusted_dominates_raw(spark):
-    out = _run(spark, "stats_benjamini_yekutieli")
+    out = run_key(spark, "stats_benjamini_yekutieli")
     for r in out.itertuples():
         p_raw = int(r.p_q) / 1e12
         assert float(r.p_adj) >= p_raw - 1e-9

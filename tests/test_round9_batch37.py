@@ -16,13 +16,7 @@ from dags_spark.operators.asn1 import (
     der_utf8,
     parse_record,
 )
-from dags_spark.registry import all_specs
-
-from .conftest import SF_DIR
-
-
-def _run(spark, key):
-    return all_specs()[key].fn(spark, SF_DIR).toPandas()
+from .conftest import run_key
 
 
 def test_der_roundtrip_and_truncation_fuzz():
@@ -65,7 +59,7 @@ def test_der_rejects_non_minimal_long_form_lengths():
 
 
 def test_crdt_pncounter_lattice_laws(spark):
-    out = _run(spark, "merge_crdt_pncounter")
+    out = run_key(spark, "merge_crdt_pncounter")
     assert out["merge_dominates"].all()
     # merged totals dominate each site's own observation totals
     assert (out["p_total"] + out["n_total"] >= 0).all()
@@ -77,7 +71,7 @@ def test_crdt_pncounter_lattice_laws(spark):
 
 
 def test_hdr_histogram_bucket_invariants(spark):
-    out = _run(spark, "agg_hdr_histogram")
+    out = run_key(spark, "agg_hdr_histogram")
     for r in out.itertuples():
         e, s, lo = int(r.e), int(r.s), int(r.bucket_lo)
         width = max(1, 2 ** max(e - 3, 0))
@@ -91,7 +85,7 @@ def test_hdr_histogram_bucket_invariants(spark):
 
 
 def test_negative_binomial_moment_identity(spark):
-    out = _run(spark, "stats_negative_binomial_fit")
+    out = run_key(spark, "stats_negative_binomial_fit")
     for r in out.itertuples():
         m, v = float(r.mean_k), float(r.var_k)
         if bool(r.overdispersed):
@@ -103,7 +97,7 @@ def test_negative_binomial_moment_identity(spark):
 
 
 def test_power_formula_crosscheck(spark):
-    out = _run(spark, "stats_power_analysis_2prop")
+    out = run_key(spark, "stats_power_analysis_2prop")
     for r in out.itertuples():
         if r.n_required_per_arm is None or (
             isinstance(r.n_required_per_arm, float)
@@ -123,8 +117,8 @@ def test_power_formula_crosscheck(spark):
 
 
 def test_sentence_segmentation_protects_abbreviations(spark):
-    out = _run(spark, "stats_negative_binomial_fit")  # warm session
-    out = _run(spark, "text_sentence_segmentation")
+    out = run_key(spark, "stats_negative_binomial_fit")  # warm session
+    out = run_key(spark, "text_sentence_segmentation")
     # class 0 templates: 4 sentences, first begins 'Dr. ' with the
     # abbreviation period RESTORED
     cls0 = out[out["p_partkey"] % 3 == 0]

@@ -7,17 +7,11 @@ from __future__ import annotations
 import colorsys
 import math
 
-from dags_spark.registry import all_specs
-
-from .conftest import SF_DIR
-
-
-def _run(spark, key):
-    return all_specs()[key].fn(spark, SF_DIR).toPandas()
+from .conftest import run_key
 
 
 def test_hsl_matches_colorsys(spark):
-    out = _run(spark, "fn_rgb_to_hsl")
+    out = run_key(spark, "fn_rgb_to_hsl")
     for r in out.head(200).itertuples():
         # colorsys returns (h in [0,1), l, s)
         h, l, s = colorsys.rgb_to_hls(r.r / 255.0, r.g / 255.0, r.b / 255.0)
@@ -27,7 +21,7 @@ def test_hsl_matches_colorsys(spark):
 
 
 def test_utm_known_points(spark):
-    out = _run(spark, "fn_geo_utm_zone")
+    out = run_key(spark, "fn_geo_utm_zone")
     # every Norway-exception point must land in zone 32, band V
     nw = out[out["norway_exception"]]
     if len(nw):
@@ -45,7 +39,7 @@ def test_utm_known_points(spark):
 
 
 def test_excel_serial_edges(spark):
-    out = _run(spark, "fn_excel_serial_date").set_index("small_serial")
+    out = run_key(spark, "fn_excel_serial_date").set_index("small_serial")
     # serial 60 is the phantom 1900-02-29 -> NULL
     if 60 in out.index:
         sub = out.loc[[60]]
@@ -61,14 +55,14 @@ def test_excel_serial_edges(spark):
 
 
 def test_gumbel_return_level_ordering(spark):
-    out = _run(spark, "stats_gumbel_max_fit")
+    out = run_key(spark, "stats_gumbel_max_fit")
     # p99 return level sits above the mean of maxima; beta positive
     assert (out["beta"] > 0).all()
     assert (out["return_level_p99"] > out["mean_max"]).all()
 
 
 def test_script_census_bounds(spark):
-    out = _run(spark, "text_script_detection")
+    out = run_key(spark, "text_script_detection")
     assert (out.loc[out["doc_id"] % 5 == 1, "n_cyrillic"] > 0).all()
     assert (out.loc[out["doc_id"] % 5 == 2, "n_greek"] > 0).all()
     assert (out.loc[out["doc_id"] % 5 == 3, "n_cjk"] > 0).all()

@@ -12,13 +12,7 @@ import math
 import pandas as pd
 import pytest
 
-from dags_spark.registry import all_specs
-
-from .conftest import SF_DIR
-
-
-def _run(spark, key):
-    return all_specs()[key].fn(spark, SF_DIR).toPandas()
+from .conftest import run_key
 
 
 def test_norm_p2_matches_reference_values(spark):
@@ -36,7 +30,7 @@ def test_norm_p2_matches_reference_values(spark):
 
 
 def test_mann_whitney_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_mann_whitney_u").iloc[0]
+    got = run_key(spark, "stats_mann_whitney_u").iloc[0]
     rows = duck.execute(
         "SELECT l_quantity, l_returnflag FROM lineitem"
         " WHERE l_returnflag IN ('R','A')"
@@ -59,7 +53,7 @@ def test_mann_whitney_matches_bruteforce(spark, duck):
 
 
 def test_ks_2sample_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_ks_2sample").iloc[0]
+    got = run_key(spark, "stats_ks_2sample").iloc[0]
     rows = duck.execute(
         "SELECT value, event_type FROM events"
         " WHERE event_type IN ('purchase','click')"
@@ -81,7 +75,7 @@ def test_ks_2sample_matches_bruteforce(spark, duck):
 
 
 def test_cohens_d_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_cohens_d").set_index("region")
+    got = run_key(spark, "stats_cohens_d").set_index("region")
     rows = duck.execute(
         """SELECT r.r_name AS region, c.c_mktsegment AS seg,
                   ROUND(c.c_acctbal * 100) AS bal_c
@@ -104,7 +98,7 @@ def test_cohens_d_matches_bruteforce(spark, duck):
 
 
 def test_mann_kendall_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_mann_kendall_trend").iloc[0]
+    got = run_key(spark, "stats_mann_kendall_trend").iloc[0]
     xs = duck.execute(
         """SELECT CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
            FROM orders GROUP BY date_trunc('month', o_orderdate)
@@ -126,7 +120,7 @@ def test_mann_kendall_matches_bruteforce(spark, duck):
 
 
 def test_bh_fdr_is_valid_step_up(spark):
-    out = _run(spark, "stats_bh_fdr").sort_values(["p_q", "brand"]).reset_index(
+    out = run_key(spark, "stats_bh_fdr").sort_values(["p_q", "brand"]).reset_index(
         drop=True
     )
     m = len(out)
@@ -142,8 +136,8 @@ def test_bh_fdr_is_valid_step_up(spark):
 
 
 def test_tost_agrees_with_cohens_population(spark):
-    tost = _run(spark, "stats_tost_equivalence").set_index("region")
-    coh = _run(spark, "stats_cohens_d").set_index("region")
+    tost = run_key(spark, "stats_tost_equivalence").set_index("region")
+    coh = run_key(spark, "stats_cohens_d").set_index("region")
     # same lanes -> same populations and mean-diff sign per region
     assert set(tost.index) == set(coh.index)
     for region in tost.index:
@@ -156,7 +150,7 @@ def test_tost_agrees_with_cohens_population(spark):
 
 
 def test_bollinger_flags_match_bruteforce(spark, duck):
-    got = _run(spark, "win_bollinger_breakout")
+    got = run_key(spark, "win_bollinger_breakout")
     daily = duck.execute(
         """SELECT date_trunc('day', o_orderdate) AS day,
                   CAST(SUM(CAST(ROUND(o_totalprice*100) AS BIGINT)) AS BIGINT)
@@ -181,7 +175,7 @@ def test_bollinger_flags_match_bruteforce(spark, duck):
 
 
 def test_sen_slope_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_sen_slope").iloc[0]
+    got = run_key(spark, "stats_sen_slope").iloc[0]
     xs = duck.execute(
         """SELECT (date_part('year', o_orderdate) - 1995) * 12
                     + date_part('month', o_orderdate) - 1 AS m,
@@ -203,7 +197,7 @@ def test_sen_slope_matches_bruteforce(spark, duck):
 
 
 def test_cuped_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_cuped_adjustment").iloc[0]
+    got = run_key(spark, "stats_cuped_adjustment").iloc[0]
     rows = duck.execute(
         """SELECT user_id,
                   SUM(CASE WHEN date_part('day', ts) <= 15
@@ -228,7 +222,7 @@ def test_cuped_matches_bruteforce(spark, duck):
 
 
 def test_peak_concurrency_matches_bruteforce(spark, duck):
-    got = _run(spark, "win_peak_concurrency").set_index("day")[
+    got = run_key(spark, "win_peak_concurrency").set_index("day")[
         "peak_concurrency"
     ]
     rows = duck.execute(
@@ -259,7 +253,7 @@ def test_peak_concurrency_matches_bruteforce(spark, duck):
 
 
 def test_dtw_matches_bruteforce(spark, duck):
-    got = _run(spark, "ts_dtw_distance")
+    got = run_key(spark, "ts_dtw_distance")
     daily = duck.execute(
         "SELECT event_type, date_trunc('day', ts) AS day,"
         " CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT) AS v"
@@ -290,7 +284,7 @@ def test_dtw_matches_bruteforce(spark, duck):
 
 
 def test_kmeans_matches_bruteforce(spark, duck):
-    got = _run(spark, "feat_kmeans_lloyd").set_index("cluster_id")
+    got = run_key(spark, "feat_kmeans_lloyd").set_index("cluster_id")
     pts = duck.execute(
         "SELECT CAST(p_size AS BIGINT)*200 AS x,"
         " CAST(ROUND(p_retailprice*100,0) AS BIGINT) - 90000 AS y FROM part"
@@ -330,7 +324,7 @@ def test_kmeans_matches_bruteforce(spark, duck):
 def test_ols_multiple_matches_numpy(spark, duck):
     import numpy as np
 
-    got = _run(spark, "stats_ols_multiple").iloc[0]
+    got = run_key(spark, "stats_ols_multiple").iloc[0]
     df = duck.execute(
         "SELECT CAST(l_quantity AS BIGINT) AS x1,"
         " CAST(ROUND(l_discount*100,0) AS BIGINT) AS x2,"
@@ -351,7 +345,7 @@ def test_ols_multiple_matches_numpy(spark, duck):
 
 
 def test_anova_matches_scipyless_bruteforce(spark, duck):
-    got = _run(spark, "stats_anova_oneway").iloc[0]
+    got = run_key(spark, "stats_anova_oneway").iloc[0]
     df = duck.execute(
         "SELECT substr(o_orderpriority,1,1) AS g,"
         " CAST(ROUND(o_totalprice*100,0) AS BIGINT) AS c FROM orders"
@@ -371,7 +365,7 @@ def test_anova_matches_scipyless_bruteforce(spark, duck):
 
 
 def test_levene_bf_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_levene_bf").iloc[0]
+    got = run_key(spark, "stats_levene_bf").iloc[0]
     df = duck.execute(
         "SELECT l_returnflag AS g,"
         " CAST(ROUND(l_extendedprice*100,0) AS BIGINT) AS c FROM lineitem"
@@ -393,7 +387,7 @@ def test_levene_bf_matches_bruteforce(spark, duck):
 
 
 def test_attribution_position_weights_conserve_revenue(spark, duck):
-    got = _run(spark, "attribution_position_based")
+    got = run_key(spark, "attribution_position_based")
     total_purchase_micro = duck.execute(
         "SELECT CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT)"
         " * 1000000 FROM events WHERE event_type = 'purchase'"
@@ -406,7 +400,7 @@ def test_attribution_position_weights_conserve_revenue(spark, duck):
 
 
 def test_attribution_time_decay_conserves_revenue(spark, duck):
-    got = _run(spark, "attribution_time_decay")
+    got = run_key(spark, "attribution_time_decay")
     total_purchase_micro = duck.execute(
         "SELECT CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT)"
         " * 1000000 FROM events WHERE event_type = 'purchase'"
@@ -417,7 +411,7 @@ def test_attribution_time_decay_conserves_revenue(spark, duck):
 
 
 def test_price_volume_mix_bridge_ties_out(spark):
-    got = _run(spark, "agg_price_volume_mix")
+    got = run_key(spark, "agg_price_volume_mix")
     for _, r in got.iterrows():
         # price+volume+mix (micro) + new - dropped (cents) ~= delta
         bridge = (
@@ -427,7 +421,7 @@ def test_price_volume_mix_bridge_ties_out(spark):
 
 
 def test_elo_matches_pure_python_replay(spark, duck):
-    got = _run(spark, "win_elo_rating")
+    got = run_key(spark, "win_elo_rating")
     ev = duck.execute(
         "SELECT user_id % 5 AS league, user_id, ts, event_id,"
         " CAST(ROUND(value*100,0) AS BIGINT) AS cents FROM events"
@@ -457,7 +451,7 @@ def test_elo_matches_pure_python_replay(spark, duck):
 def test_weibull_fit_matches_numpy(spark, duck):
     import numpy as np
 
-    got = _run(spark, "stats_weibull_fit").iloc[0]
+    got = run_key(spark, "stats_weibull_fit").iloc[0]
     df = duck.execute(
         "SELECT date_diff('day', MIN(o_orderdate), MAX(o_orderdate)) + 1 AS t"
         " FROM orders GROUP BY o_custkey ORDER BY t"
@@ -478,7 +472,7 @@ def test_weibull_fit_matches_numpy(spark, duck):
 def test_granger_matches_statsmodels_free_ols(spark, duck):
     import numpy as np
 
-    got = _run(spark, "stats_granger_lagged").iloc[0]
+    got = run_key(spark, "stats_granger_lagged").iloc[0]
     daily = duck.execute(
         "SELECT date_trunc('day', ts) AS day,"
         " CAST(SUM(CASE WHEN event_type='purchase'"
@@ -505,7 +499,7 @@ def test_granger_matches_statsmodels_free_ols(spark, duck):
 
 
 def test_jarque_bera_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_jarque_bera").iloc[0]
+    got = run_key(spark, "stats_jarque_bera").iloc[0]
     c = duck.execute(
         "SELECT CAST(ROUND(o_totalprice*100,0) AS BIGINT) AS c FROM orders"
     ).df()["c"].astype(float)
@@ -524,7 +518,7 @@ def test_jarque_bera_matches_bruteforce(spark, duck):
 
 
 def test_runs_test_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_runs_test").iloc[0]
+    got = run_key(spark, "stats_runs_test").iloc[0]
     daily = duck.execute(
         "SELECT date_trunc('day', ts) AS day,"
         " CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT) AS c"
@@ -545,7 +539,7 @@ def test_runs_test_matches_bruteforce(spark, duck):
 def test_durbin_watson_matches_bruteforce(spark, duck):
     import numpy as np
 
-    got = _run(spark, "stats_durbin_watson").iloc[0]
+    got = run_key(spark, "stats_durbin_watson").iloc[0]
     daily = duck.execute(
         "SELECT date_trunc('day', ts) AS day,"
         " CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT) AS y"
@@ -561,7 +555,7 @@ def test_durbin_watson_matches_bruteforce(spark, duck):
 
 
 def test_holt_winters_matches_pure_python(spark, duck):
-    got = _run(spark, "ts_holt_winters_seasonal").sort_values("t")
+    got = run_key(spark, "ts_holt_winters_seasonal").sort_values("t")
     daily = duck.execute(
         "SELECT date_trunc('day', ts) AS day,"
         " CAST(CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT)"
@@ -592,7 +586,7 @@ def test_holt_winters_matches_pure_python(spark, duck):
 def test_markov_stationary_matches_numpy(spark, duck):
     import numpy as np
 
-    got = _run(spark, "iter_markov_stationary").iloc[0]
+    got = run_key(spark, "iter_markov_stationary").iloc[0]
     df = duck.execute(
         """
         WITH ev AS (
@@ -618,7 +612,7 @@ def test_markov_stationary_matches_numpy(spark, duck):
 
 
 def test_croston_matches_pure_python(spark, duck):
-    got = _run(spark, "ts_croston_intermittent").set_index("brand")
+    got = run_key(spark, "ts_croston_intermittent").set_index("brand")
     df = duck.execute(
         """
         SELECT p.p_brand AS brand,
@@ -654,7 +648,7 @@ def test_croston_matches_pure_python(spark, duck):
 
 
 def test_beta_binomial_shrinkage_pulls_toward_prior_mean(spark, duck):
-    got = _run(spark, "stats_beta_binomial_shrinkage")
+    got = run_key(spark, "stats_beta_binomial_shrinkage")
     m = (got["alpha"] / (got["alpha"] + got["beta"])).iloc[0]
     for _, r in got.iterrows():
         raw, shrunk = r["raw_rate"], r["shrunk_rate"]
@@ -673,7 +667,7 @@ def test_beta_binomial_shrinkage_pulls_toward_prior_mean(spark, duck):
 def test_block_bootstrap_matches_pure_python(spark, duck):
     import hashlib
 
-    got = _run(spark, "sample_block_bootstrap").iloc[0]
+    got = run_key(spark, "sample_block_bootstrap").iloc[0]
     daily = duck.execute(
         "SELECT date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) + 1 AS t,"
         " CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT) AS c"
@@ -700,7 +694,7 @@ def test_block_bootstrap_matches_pure_python(spark, duck):
 def test_shapley_matches_permutation_bruteforce(spark, duck):
     from itertools import permutations
 
-    got = _run(spark, "attribution_shapley").iloc[0]
+    got = run_key(spark, "attribution_shapley").iloc[0]
     masks = duck.execute(
         """
         WITH ev AS (
@@ -753,7 +747,7 @@ def test_shapley_matches_permutation_bruteforce(spark, duck):
 def test_hurst_rs_matches_numpy(spark, duck):
     import numpy as np
 
-    got = _run(spark, "ts_hurst_rs").iloc[0]
+    got = run_key(spark, "ts_hurst_rs").iloc[0]
     daily = duck.execute(
         "SELECT date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) + 1 AS t,"
         " CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT) AS c"
@@ -798,7 +792,7 @@ def test_damm_matches_reference_algorithm(spark, duck):
         return interim
 
     assert damm("572") == 4  # the classic worked example
-    got = _run(spark, "fn_damm_checksum")
+    got = run_key(spark, "fn_damm_checksum")
     keys = duck.execute("SELECT c_custkey FROM customer").df()["c_custkey"]
     from collections import Counter
 
@@ -810,7 +804,7 @@ def test_damm_matches_reference_algorithm(spark, duck):
 def test_breusch_pagan_matches_numpy(spark, duck):
     import numpy as np
 
-    got = _run(spark, "stats_breusch_pagan").iloc[0]
+    got = run_key(spark, "stats_breusch_pagan").iloc[0]
     daily = duck.execute(
         "SELECT date_trunc('day', ts) AS day,"
         " CAST(SUM(CAST(ROUND(value*100,0) AS BIGINT)) AS BIGINT) AS y"
@@ -829,7 +823,7 @@ def test_breusch_pagan_matches_numpy(spark, duck):
 
 
 def test_token_bucket_matches_pure_python(spark, duck):
-    got = _run(spark, "win_token_bucket_throttle").set_index("user_id")
+    got = run_key(spark, "win_token_bucket_throttle").set_index("user_id")
     ev = duck.execute(
         "SELECT user_id, epoch_us(ts) AS eu, event_id FROM events"
         " ORDER BY user_id, ts, event_id"
@@ -854,7 +848,7 @@ def test_token_bucket_matches_pure_python(spark, duck):
 def test_pca_2x2_matches_numpy(spark, duck):
     import numpy as np
 
-    got = _run(spark, "stats_pca_2x2_analytic").iloc[0]
+    got = run_key(spark, "stats_pca_2x2_analytic").iloc[0]
     df = duck.execute(
         "SELECT CAST(p_size AS BIGINT) AS x,"
         " CAST(ROUND(p_retailprice*100,0) AS BIGINT) AS y FROM part"
@@ -871,7 +865,7 @@ def test_pca_2x2_matches_numpy(spark, duck):
 def test_paired_ttest_matches_scipyless(spark, duck):
     import numpy as np
 
-    got = _run(spark, "stats_paired_ttest").iloc[0]
+    got = run_key(spark, "stats_paired_ttest").iloc[0]
     df = duck.execute(
         """
         WITH per AS (
@@ -892,7 +886,7 @@ def test_paired_ttest_matches_scipyless(spark, duck):
 
 
 def test_feistel_is_bijective_and_invertible(spark):
-    got = _run(spark, "fn_feistel_permutation").iloc[0]
+    got = run_key(spark, "fn_feistel_permutation").iloc[0]
     assert bool(got["is_bijective"])
     assert int(got["n_distinct_tokens"]) == int(got["n_keys"])
     # invert the 2-round network in pure Python for a sample of keys
@@ -919,7 +913,7 @@ def test_feistel_is_bijective_and_invertible(spark):
 
 
 def test_easter_matches_known_dates(spark):
-    got = _run(spark, "fn_easter_computus").set_index("year")
+    got = run_key(spark, "fn_easter_computus").set_index("year")
     known = {
         1995: (4, 16), 1996: (4, 7), 1997: (3, 30), 1998: (4, 12),
         1999: (4, 4), 2000: (4, 23), 2001: (4, 15),
@@ -931,7 +925,7 @@ def test_easter_matches_known_dates(spark):
 
 
 def test_vwap_never_averages_averages(spark, duck):
-    got = _run(spark, "win_vwap_rolling")
+    got = run_key(spark, "win_vwap_rolling")
     ref = duck.execute(
         """
         WITH t AS (
@@ -963,7 +957,7 @@ def test_vwap_never_averages_averages(spark, duck):
 
 
 def test_growth_accounting_reconciles_wau(spark, duck):
-    got = _run(spark, "win_growth_accounting")
+    got = run_key(spark, "win_growth_accounting")
     wau = duck.execute(
         "SELECT date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7"
         " AS wk, COUNT(DISTINCT user_id) AS n FROM events GROUP BY wk"
@@ -992,7 +986,7 @@ def test_growth_accounting_reconciles_wau(spark, duck):
 
 
 def test_lift_chart_is_monotone_and_captures_all(spark):
-    got = _run(spark, "rank_lift_chart_deciles").sort_values("decile")
+    got = run_key(spark, "rank_lift_chart_deciles").sort_values("decile")
     assert abs(got["cum_capture"].iloc[-1] - 1.0) < 1e-9
     assert (got["cum_capture"].diff().dropna() >= -1e-12).all()
     n_total = got["n"].sum()
@@ -1000,7 +994,7 @@ def test_lift_chart_is_monotone_and_captures_all(spark):
 
 
 def test_lerp_curve_fraction_bounds_and_endpoints(spark, duck):
-    got = _run(spark, "join_lerp_curve")
+    got = run_key(spark, "join_lerp_curve")
     assert ((got["frac"] >= 0) & (got["frac"] < 1)).all()
     curve = duck.execute(
         """
@@ -1021,7 +1015,7 @@ def test_lerp_curve_fraction_bounds_and_endpoints(spark, duck):
 
 
 def test_mrr_bridge_ties_out_exactly(spark, duck):
-    got = _run(spark, "agg_mrr_bridge")
+    got = run_key(spark, "agg_mrr_bridge")
     per = duck.execute(
         "SELECT date_part('year', o_orderdate) AS y,"
         " CAST(SUM(CAST(ROUND(o_totalprice*100,0) AS BIGINT)) AS BIGINT)"
@@ -1039,7 +1033,7 @@ def test_mrr_bridge_ties_out_exactly(spark, duck):
 
 
 def test_catalog_coverage_partitions_the_catalog(spark, duck):
-    got = _run(spark, "agg_catalog_coverage")
+    got = run_key(spark, "agg_catalog_coverage")
     n_parts = duck.execute("SELECT COUNT(*) FROM part").fetchone()[0]
     n_lines = duck.execute("SELECT COUNT(*) FROM lineitem").fetchone()[0]
     assert int(got["n_parts"].sum()) == n_parts
@@ -1048,7 +1042,7 @@ def test_catalog_coverage_partitions_the_catalog(spark, duck):
 
 
 def test_checksum_bisect_localizes_the_plant(spark, duck):
-    got = _run(spark, "dq_checksum_bisect")
+    got = run_key(spark, "dq_checksum_bisect")
     planted = duck.execute(
         "SELECT DISTINCT o_orderkey % 16 FROM orders"
         " WHERE o_orderkey % 1000 = 7"
@@ -1061,13 +1055,13 @@ def test_checksum_bisect_localizes_the_plant(spark, duck):
 
 
 def test_dwell_time_shares_sum_to_one(spark):
-    got = _run(spark, "win_dwell_time_by_state")
+    got = run_key(spark, "win_dwell_time_by_state")
     assert abs(got["share_of_time"].sum() - 1.0) < 1e-5
     assert (got["dwell_us"] > 0).all() and (got["n_spans"] > 0).all()
 
 
 def test_shrinkage_orders_small_groups_by_prior(spark):
-    got = _run(spark, "stats_beta_binomial_shrinkage")
+    got = run_key(spark, "stats_beta_binomial_shrinkage")
     # all shrunk rates lie strictly inside (0, 1) and alpha, beta > 0
     assert ((got["shrunk_rate"] > 0) & (got["shrunk_rate"] < 1)).all()
     assert (got["alpha"] > 0).all() and (got["beta"] > 0).all()

@@ -9,17 +9,11 @@ import math
 
 import pytest
 
-from dags_spark.registry import all_specs
-
-from .conftest import SF_DIR
-
-
-def _run(spark, key):
-    return all_specs()[key].fn(spark, SF_DIR).toPandas()
+from .conftest import run_key
 
 
 def test_kruskal_wallis_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_kruskal_wallis").iloc[0]
+    got = run_key(spark, "stats_kruskal_wallis").iloc[0]
     rows = duck.execute(
         "SELECT CAST(l_quantity AS BIGINT) AS q, l_returnflag AS fl"
         " FROM lineitem"
@@ -42,7 +36,7 @@ def test_fisher_exact_matches_math_comb(spark, duck):
     """Exact-integer reference: hypergeometric terms via math.comb
     (arbitrary precision), the standard two-sided 'sum of tables at
     most as likely' definition with (1+1e-7) slack."""
-    got = _run(spark, "stats_fisher_exact").iloc[0]
+    got = run_key(spark, "stats_fisher_exact").iloc[0]
     a, r1, c1, n = (int(got[k]) for k in ("a", "r1", "c1", "n"))
     ref = duck.execute(
         "SELECT CAST(SUM(CASE WHEN p_size <= 10 AND p_type LIKE 'PROMO%'"
@@ -65,7 +59,7 @@ def test_fisher_exact_matches_math_comb(spark, duck):
 
 
 def test_friedman_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_friedman_test").iloc[0]
+    got = run_key(spark, "stats_friedman_test").iloc[0]
     cells = duck.execute(
         "SELECT date_trunc('month', o_orderdate) AS blk, o_orderpriority AS trt,"
         " CAST(SUM(CAST(ROUND(o_totalprice*100,0) AS BIGINT)) AS DOUBLE)"
@@ -88,7 +82,7 @@ def test_friedman_matches_bruteforce(spark, duck):
 
 
 def test_brier_decomposition_identity_and_bruteforce(spark, duck):
-    got = _run(spark, "stats_brier_decomposition").iloc[0]
+    got = run_key(spark, "stats_brier_decomposition").iloc[0]
     rows = duck.execute(
         "SELECT EXTRACT(hour FROM ts) AS hb,"
         " CASE WHEN event_type='purchase' THEN 1 ELSE 0 END AS y,"
@@ -116,7 +110,7 @@ def test_brier_decomposition_identity_and_bruteforce(spark, duck):
 
 
 def test_logrank_matches_bruteforce(spark, duck):
-    got = _run(spark, "stats_logrank_test").iloc[0]
+    got = run_key(spark, "stats_logrank_test").iloc[0]
     subj = duck.execute(
         """
         WITH firstev AS (
@@ -161,7 +155,7 @@ def test_logrank_matches_bruteforce(spark, duck):
 
 
 def test_err_cascade_matches_bruteforce(spark, duck):
-    got = _run(spark, "rank_err_cascade").set_index("user_key")
+    got = run_key(spark, "rank_err_cascade").set_index("user_key")
     rows = duck.execute(
         """
         SELECT o.o_custkey AS u, LEAST(COUNT(l.l_orderkey), 4) AS rel,

@@ -1,7 +1,9 @@
-"""Dump per-query .explain("formatted") files for the optimization
-round evidence trail (plans/r11/<query>_{before,after}.txt).
+"""Dump per-query .explain("formatted") files for an optimization
+round's evidence trail (<round_dir>/<query>_{before,after}.txt).
 
-Usage:  python tools/plan_dump_r11.py before|after [key ...]
+Usage:  python tools/plan_dump.py <round_dir> before|after [key ...]
+
+e.g. ``python tools/plan_dump.py plans/r11 after q6_cosine_topk``.
 
 Session mirrors the bench profile exactly (same three knobs as
 bench.py) so the dumped plan is the one the driver times. With no
@@ -36,14 +38,16 @@ BENCH = {
 
 
 def main() -> None:
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    keys = sys.argv[2:]
-    spark = get_spark("plan-dump-r11")
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    outdir = Path(sys.argv[1])
+    suffix = sys.argv[2] if len(sys.argv) > 2 else "before"
+    keys = sys.argv[3:]
+    spark = get_spark("plan-dump")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     spark.conf.set("spark.sql.files.maxPartitionBytes", "2m")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     specs = all_specs()
-    outdir = REPO / "plans" / "r11"
     outdir.mkdir(parents=True, exist_ok=True)
     # explicit args accept either a bench label (q10_text_pipeline) or
     # a bare registry key
