@@ -1,25 +1,24 @@
-"""Per-key correctness: one case per registered key builds the key's
-plan once and runs every check on that DataFrame.
+"""Per-key correctness. ``check_key`` builds a key's plan once, runs
+every static check on it, then runs it; each test below (and the
+lint and dtype sweeps in test_plan_lint.py / test_dtype_parity.py)
+asserts one facet of that memoised check, so a full suite builds each
+key once and runs each hash key twice.
 
-- Batch keys: the physical plan is free of scale anti-patterns
-  (cartesian joins, single-partition exchanges, row-wise Python UDFs)
-  except where the key's semantics REQUIRE the construct (``ALLOWED``,
-  each with its reason), and every waived code still fires.
-- Batch hash keys: only atomic columns (the external driver's
-  canonicalizer cannot sort/hash array/map/struct/binary cells), and
-  each column's dtype family (int vs float vs bool vs timestamp)
-  matches the oracle's ``LIMIT 0`` dtypes. DuckDB returns HUGEINT
-  (pandas float64) for an un-CAST integer SUM while Spark returns
-  int64: values compare equal, the driver's value-hash differs.
-- Hash keys: the result matches the DuckDB oracle at the test SF (the
-  driver's t2 gate; tools/check.py mirrors it at sf0.01), and a rebuilt
-  plan returns the same values — the cheapest insurance against
-  value-hash flakes when an external harness re-runs a key
+- Batch keys: no plan anti-pattern except the ``ALLOWED`` waivers,
+  each of which must still fire.
+- Batch hash keys: atomic columns only, and dtype families match the
+  oracle's ``LIMIT 0`` dtypes.
+- Hash keys: column names and values match the DuckDB oracle at the
+  test SF (the driver's t2 gate; tools/check.py mirrors it at sf0.01),
+  and a rebuilt plan returns the same values — the cheapest insurance
+  against value-hash flakes when an external harness re-runs a key
   (tie-breaks, partial-agg fold order, partition-dependent limits).
 - Rows keys: the key runs.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass, field
 
 import pytest
 from pyspark.sql.types import ArrayType, BinaryType, MapType, StructType
@@ -31,6 +30,10 @@ from dags_spark.testing import compare
 SPECS = all_specs()
 # built and linted only: too slow to run at the test SF
 SLOW_KEYS = {"dedup_fuzzy_minhash"}
+
+HASH_KEYS = sorted(k for k, s in SPECS.items() if s.oracle and k not in SLOW_KEYS)
+ROWS_KEYS = sorted(k for k, s in SPECS.items() if not s.oracle and k not in SLOW_KEYS)
+BATCH_KEYS = sorted(k for k, s in SPECS.items() if s.module != "streaming")
 
 NON_ATOMIC = (ArrayType, MapType, StructType, BinaryType)
 
@@ -119,44 +122,108 @@ def _family(t: str) -> str:
     return "other"
 
 
-@pytest.mark.parametrize("key", sorted(SPECS))
-def test_every_key(key, spark, duck, sf_dir):
+@dataclass
+class KeyCheck:
+    """What one build (and, once ``ran``, one execution) of a key showed.
+    Each list holds the problems of one facet; empty means it passed."""
+
+    columns: list[str]
+    oracle_columns: list[str]
+    lint: list = field(default_factory=list)
+    dtypes: list = field(default_factory=list)
+    ran: bool = False
+    oracle: list = field(default_factory=list)
+    rerun: list = field(default_factory=list)
+
+
+_CHECKS: dict[str, KeyCheck] = {}
+
+
+def _static_check(key, df, duck) -> KeyCheck:
     spec = SPECS[key]
-    hashed = spec.check == "hash"
+    s_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
+    d_types = {}
+    if spec.oracle:
+        d = duck.execute(f"SELECT * FROM ({spec.oracle}) LIMIT 0").df()
+        d_types = {c: str(t) for c, t in d.dtypes.items()}
+    c = KeyCheck(columns=sorted(s_types), oracle_columns=sorted(d_types))
+    if spec.module == "streaming":
+        return c  # the lint and dtype sweeps cover batch keys
+    findings = lint_plan(df)
+    waived = ALLOWED.get(key, set())
+    c.lint = [(f.code, f.node) for f in findings if f.code not in waived]
+    c.lint += [("stale-waiver", code) for code in waived - {f.code for f in findings}]
+    if spec.check != "hash":
+        return c
+    c.lint += [
+        ("non-atomic-column", f.name)
+        for f in df.schema.fields
+        if isinstance(f.dataType, NON_ATOMIC)
+    ]
+    if c.columns != c.oracle_columns:
+        c.dtypes = [("columns", c.columns, c.oracle_columns)]
+    else:
+        c.dtypes = [
+            (col, s_types[col], d_types[col])
+            for col in s_types
+            if "other" not in (_family(s_types[col]), _family(d_types[col]))
+            and _family(s_types[col]) != _family(d_types[col])
+        ]
+    return c
+
+
+def check_key(key, spark, duck, sf_dir, run=True) -> KeyCheck:
+    """Build ``key`` once, check it statically and, with ``run``, execute
+    it: a hash key is compared with the oracle, then rebuilt, rerun and
+    compared with its first result. Memoised per key; a later ``run``
+    after a static-only call builds the plan again."""
+    c = _CHECKS.get(key)
+    if c is not None and (c.ran or not run):
+        return c
+    spec = SPECS[key]
     df = spec.fn(spark, sf_dir)
+    if c is None:
+        c = _CHECKS[key] = _static_check(key, df, duck)
+    if run:
+        got = df.toPandas()
+        if spec.oracle:
+            c.oracle = compare(got, duck.execute(spec.oracle).df())
+            c.rerun = compare(got, spec.fn(spark, sf_dir).toPandas())
+        c.ran = True
+    return c
 
-    if spec.module != "streaming":
-        findings = lint_plan(df)
-        waived = ALLOWED.get(key, set())
-        bad = [(f.code, f.node) for f in findings if f.code not in waived]
-        assert not bad, f"{key}: plan lint violations: {bad}"
-        stale = waived - {f.code for f in findings}
-        assert not stale, f"{key}: waived lint codes no longer fire: {stale}"
-        if hashed:
-            nested = [
-                f.name for f in df.schema.fields if isinstance(f.dataType, NON_ATOMIC)
-            ]
-            assert not nested, f"{key}: non-atomic columns {nested}"
-            s_types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-            d = duck.execute(f"SELECT * FROM ({spec.oracle}) LIMIT 0").df()
-            d_types = {c: str(t) for c, t in d.dtypes.items()}
-            assert sorted(s_types) == sorted(d_types), (
-                f"{key}: columns differ: spark={sorted(s_types)} duck={sorted(d_types)}"
-            )
-            drift = [
-                (c, s_types[c], d_types[c])
-                for c in s_types
-                if "other" not in (_family(s_types[c]), _family(d_types[c]))
-                and _family(s_types[c]) != _family(d_types[c])
-            ]
-            assert not drift, f"{key}: dtype-family drift: {drift}"
 
-    if key in SLOW_KEYS:
-        return
-    got = df.toPandas()
-    if not hashed:
-        return
-    problems = compare(got, duck.execute(spec.oracle).df())
+@pytest.mark.parametrize("key", HASH_KEYS)
+def test_hash_query_matches_oracle(key, spark, duck, sf_dir):
+    problems = check_key(key, spark, duck, sf_dir).oracle
     assert not problems, f"{key}: {problems}"
-    rerun = spec.fn(spark, sf_dir).toPandas()
-    assert not compare(got, rerun), f"{key} not deterministic across runs"
+
+
+@pytest.mark.parametrize("key", ROWS_KEYS)
+def test_rows_query_runs(key, spark, duck, sf_dir):
+    assert check_key(key, spark, duck, sf_dir).ran
+
+
+def test_hash_queries_are_deterministic(spark, duck, sf_dir):
+    """Determinism spot-check; the sweep below covers every hash key."""
+    for key in ["agg_pricing_summary", "win_ranking", "sim_search_topk", "text_tfidf"]:
+        assert not check_key(key, spark, duck, sf_dir).rerun, f"{key} not deterministic"
+
+
+@pytest.mark.parametrize("key", HASH_KEYS)
+def test_every_hash_key_is_deterministic(key, spark, duck, sf_dir):
+    """Every hash key rebuilt and run a second time in one session must
+    return the values of its first run."""
+    assert not check_key(key, spark, duck, sf_dir).rerun, (
+        f"{key} not deterministic across runs"
+    )
+
+
+def test_every_hash_key_has_matching_aliases(spark, duck, sf_dir):
+    """Column names must match between Spark and oracle (driver sorts
+    columns by name before hashing)."""
+    for key in HASH_KEYS:
+        c = check_key(key, spark, duck, sf_dir, run=False)
+        assert c.columns == c.oracle_columns, (
+            f"{key}: {c.columns} != {c.oracle_columns}"
+        )

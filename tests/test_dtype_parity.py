@@ -1,10 +1,24 @@
-"""Dtype-family guards below the per-key check in test_correctness.py:
-the nested value-family signatures `compare` uses, and the type-text
-parsers of tools/dtype_sweep.py. DuckDB returns HUGEINT for integer
-SUMs (pandas float64) while Spark returns int64: values compare equal
-element-wise but the driver's value-hash differs."""
+"""Dtype-family guards. DuckDB returns HUGEINT for integer SUMs
+(pandas float64) and TINYINT for sign(); Spark returns int64 — values
+compare equal but the driver's value-hash differs. The sweep checks
+every batch hash key's Spark schema against the oracle's ``LIMIT 0``
+dtypes; below it, the nested value-family signatures `compare` uses
+and the type-text parsers of tools/dtype_sweep.py."""
 
 from __future__ import annotations
+
+from .test_correctness import BATCH_KEYS, SPECS, check_key
+
+
+def test_hash_key_dtype_families_match_oracle(spark, duck, sf_dir):
+    problems = {}
+    for key in BATCH_KEYS:
+        if SPECS[key].check != "hash":
+            continue
+        drift = check_key(key, spark, duck, sf_dir, run=False).dtypes
+        if drift:
+            problems[key] = drift
+    assert not problems, f"dtype-family drift: {problems}"
 
 
 def test_nested_family_signatures():

@@ -1,12 +1,26 @@
-"""Plan-linter self-tests: deliberately bad plans trip each finding
-code, proven-bounded shapes stay clean, and the two-pass global
-operators the linter steers keys onto match their single-window
-equivalents. The per-key lint of every registered batch query is in
-test_correctness.py."""
+"""Plan lint: the sweep of every registered batch query's physical
+plan (waivers in ``test_correctness.ALLOWED``, each with its reason),
+then linter self-tests — bad plans trip each finding code, proven-
+bounded shapes stay clean, and the two-pass global operators the
+linter steers keys onto match their single-window equivalents."""
 
 from __future__ import annotations
 
 from dags_spark.plans import lint_plan
+
+from .test_correctness import BATCH_KEYS, check_key
+
+
+def test_every_batch_plan_is_lint_clean(spark, duck, sf_dir):
+    """Also: every waived code still fires, and hash keys emit only
+    atomic columns — the external driver's canonicalizer cannot
+    sort/hash array/map/struct/binary cells."""
+    violations = {}
+    for key in BATCH_KEYS:
+        bad = check_key(key, spark, duck, sf_dir, run=False).lint
+        if bad:
+            violations[key] = bad
+    assert not violations, f"plan lint violations: {violations}"
 
 
 def test_lint_catches_cartesian_and_single_partition(spark, sf_dir):
