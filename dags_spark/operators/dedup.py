@@ -442,83 +442,30 @@ def minhash_banded_pairs(
 
 
 def connected_components(
-    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 25
-) -> DataFrame:
-    """Connected components over an undirected pair list by iterative
-    min-label propagation: every node repeatedly adopts the smallest
-    label among itself and its neighbors until fixpoint.
-
-    This is the dedup-clustering step that turns near-dup PAIRS into
-    dedup GROUPS (keep one doc per component). Converges in at most
-    graph-diameter rounds; each round is one join + one aggregate,
-    all distributed — no driver-side graph. ``localCheckpoint``
-    truncates lineage so the plan does not grow with iterations
-    (the standard Spark iterative-algorithm pattern).
-
-    Returns (id, component) with component = min reachable id —
-    a deterministic fixpoint, so the result is engine-checkable.
-    """
-    edges = (
-        pairs.select(F.col(id_a).alias("s"), F.col(id_b).alias("d"))
-        .unionByName(pairs.select(F.col(id_b).alias("s"), F.col(id_a).alias("d")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("s").alias("id")).distinct().withColumn("label", F.col("id"))
-    ).localCheckpoint()
-    for _ in range(max_iter):
-        nbr_min = (
-            edges.join(labels, edges.d == labels.id)
-            .groupBy("s")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        new_labels = (
-            labels.withColumnRenamed("label", "label_old")
-            .join(nbr_min, labels.id == nbr_min.s, "left")
-            .select(
-                "id",
-                "label_old",
-                F.least(
-                    F.col("label_old"), F.coalesce("nbr_label", F.col("label_old"))
-                ).alias("label"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("label") != F.col("label_old")).count()
-        # new_labels is already materialized by its localCheckpoint —
-        # projecting from it is free; a second checkpoint here doubles
-        # the per-round job count for nothing.
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            break
-    return labels.select(F.col("id"), F.col("label").alias("component"))
-
-
-def connected_components_star(
     pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b", max_iter: int = 30
 ) -> DataFrame:
-    """Connected components via alternating LARGE-STAR / SMALL-STAR
-    contractions (Kiveris/Lattanzi/Mirrokni/Rastogi/Vassilvitskii,
-    "Connected Components in MapReduce and Beyond", ACM SoCC 2014 —
-    public algorithm): the round count is O(log^2 n) INDEPENDENT OF
-    GRAPH DIAMETER, the bound min-label propagation
-    (``connected_components`` above) lacks — a path graph of length
-    10^6 takes ~10^6 propagation rounds but ~40 star rounds. Near-dup
-    graphs have tiny diameters, so both work there; this is the
-    variant that also survives pathological chains (log-style data,
-    linked update sequences) at 100 TB.
+    """Connected components over an undirected pair list via
+    alternating LARGE-STAR / SMALL-STAR contractions
+    (Kiveris/Lattanzi/Mirrokni/Rastogi/Vassilvitskii, "Connected
+    Components in MapReduce and Beyond", ACM SoCC 2014 — public
+    algorithm). This is the dedup-clustering step that turns near-dup
+    PAIRS into dedup GROUPS (keep one doc per component). The round
+    count is O(log^2 n) INDEPENDENT OF GRAPH DIAMETER: a path graph of
+    length 10^6 takes ~40 rounds, so pathological chains (log-style
+    data, linked update sequences) survive at 100 TB.
 
     large-star(u): every neighbor v > u re-attaches to
     m = min(N(u) ∪ {u}); small-star over (max,min)-directed edges:
     every smaller neighbor and u itself attach to m. Each step is one
     groupBy + join (distributed, no driver graph), lineage truncated
     per round with localCheckpoint; the fixpoint is a star forest
-    rooted at each component's minimum id.
+    rooted at each component's minimum id. Raises if ``max_iter``
+    rounds pass without a fixpoint rather than return a partial
+    labelling.
 
-    Returns (id, component), component = min id of the component —
-    the same deterministic contract as connected_components, asserted
-    equal on random graphs by tests/test_operators.py.
+    Returns (id, component) for every pair endpoint — self-loop-only
+    nodes included — with component = min id of the component, a
+    deterministic fixpoint, so the result is engine-checkable.
     """
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -565,15 +512,15 @@ def connected_components_star(
         ).collect()[0]
         return (row.n, row.h)
 
-    edges = (
+    ends = (
         pairs.select(
             F.col(id_a).cast("long").alias("u"),
             F.col(id_b).cast("long").alias("v"),
         )
-        .filter(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()
     )
+    edges = ends.filter(F.col("u") != F.col("v"))
     prev = None
     for _ in range(max_iter):
         edges = small_star(large_star(edges)).localCheckpoint()
@@ -581,13 +528,15 @@ def connected_components_star(
         if cur == prev:
             break
         prev = cur
-    comp = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
-    roots = (
-        edges.select("v")
-        .distinct()
-        .select(F.col("v").alias("id"), F.col("v").alias("component"))
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after {max_iter} rounds"
+        )
+    nodes = ends.select(F.col("u").alias("id")).union(ends.select("v")).distinct()
+    forest = edges.select(F.col("u").alias("id"), F.col("v").alias("component"))
+    return nodes.join(forest, "id", "left").select(
+        "id", F.coalesce("component", "id").alias("component")
     )
-    return comp.union(roots).distinct()
 
 
 # --- winnowing fingerprints (exact substring-overlap dedup) ----------

@@ -5,8 +5,9 @@ and property tests.
 ``dedup.connected_components``: when the hop limit k is known, the
 loop unrolls into k chained equi-joins inside ONE Catalyst plan — no
 driver-side iteration state, no checkpointing needed (plan depth is
-bounded by k). For unbounded propagation use connected_components,
-which iterates with localCheckpoint.
+bounded by k). For unbounded depth use connected_components, whose
+large-star/small-star rounds are O(log^2 n) whatever the diameter,
+each pinned with localCheckpoint.
 
 `resample_interp_daily` is the linear-interpolation core of the
 ts_resample_interp key: two mirrored IGNORE NULLS windows over one
@@ -130,11 +131,11 @@ def pagerank_fixed(
     loop UNROLLS into `iterations` chained join+agg rounds — one
     logical plan, no driver-side state; every round shuffles on the
     node key only (rank table is |V| rows, contributions <= |E|).
-    For unbounded/convergence variants add localCheckpoint per round
-    as dedup_connected_components does. Dangling nodes (no
-    out-edges) are not redistributed — the caller's graph should be
-    functional (out-degree >= 1), as a derived hash-successor graph
-    is by construction.
+    For unbounded/convergence variants pin each round with
+    localCheckpoint, as dedup.connected_components does. Dangling
+    nodes (no out-edges) are not redistributed — the caller's graph
+    should be functional (out-degree >= 1), as a derived
+    hash-successor graph is by construction.
     """
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
     ranks = (

@@ -166,54 +166,94 @@ def write_zordered(
     )
 
 
+def range_split(df: DataFrame, cols: list, n: int) -> DataFrame:
+    """Range-partition ``df`` on ``cols`` into ``n`` partitions, tag
+    each row with its ``__pid`` and PIN the result with
+    localCheckpoint — phase 1 of every two-phase global-order rewrite
+    (global_running here, dq_id_density_audit's gap scan).
+
+    The pin is what makes the rewrite sound: the per-partition pass
+    and the partition-count-sized offsets table both consume the range
+    exchange, and without pinning AQE may coalesce the two instances
+    differently (or a caller's self-referencing plan may re-evaluate
+    the exchange), pairing offsets from one partitioning with __pid
+    from another — duplicate/gapped ranks. The checkpoint is exactly
+    the pass-1 materialization a two-pass 100 TB sort does anyway
+    (write ranked runs, then publish). RangePartitioner samples to
+    pick boundaries; that only moves WHERE a row lands, never what a
+    total-order scan computes for it."""
+    return (
+        df.repartitionByRange(n, *cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+
+
+def global_running(
+    df: DataFrame,
+    order_cols: list,
+    value,
+    agg: str,
+    out_col: str,
+    n_partitions: int = 32,
+) -> DataFrame:
+    """INCLUSIVE global running ``agg`` ("sum" or "min") of ``value``
+    (a column name or Column) over a total order, WITHOUT the
+    single-partition window (`Window.orderBy(...)` with no partition
+    key funnels the entire table through one task — a non-plan at
+    100 TB).
+
+    Two-phase rewrite on range_split: accumulate within each range
+    partition in parallel, fold ``agg`` over the totals of the
+    PRECEDING partitions in a broadcast offsets table (one row per
+    partition — partition-count-grain, never data- or domain-grain),
+    then combine: ``coalesce(off, 0) + within`` for sum,
+    ``least(off, within)`` for min (least skips the first partition's
+    null offset). Both folds are associative, so the result equals
+    the single-window answer. The order must carry a unique tie-break
+    column (house determinism rule 3) so the total order — and every
+    prefix — is engine- and partitioning-independent."""
+    fold = {"sum": F.sum, "min": F.min}[agg]
+    cols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
+    v = F.col(value) if isinstance(value, str) else value
+    d = range_split(df, cols, n_partitions)
+    offs = (
+        d.groupBy("__pid")
+        .agg(fold(v).alias("__tot"))
+        .select(
+            "__pid",
+            fold("__tot")
+            .over(Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1))
+            .alias("__off"),
+        )
+    )
+    within = fold(v).over(
+        Window.partitionBy("__pid")
+        .orderBy(*cols)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    if agg == "sum":
+        running = F.coalesce(F.col("__off"), F.lit(0)) + within
+    else:
+        running = F.least(F.col("__off"), within)
+    return (
+        d.join(F.broadcast(offs), "__pid")
+        .withColumn(out_col, running)
+        .drop("__pid", "__off")
+    )
+
+
 def global_rank(
     df: DataFrame,
     order_cols: list,
     rank_col: str = "rank",
     n_partitions: int = 32,
 ) -> DataFrame:
-    """Global ROW_NUMBER over a total order WITHOUT the
-    single-partition window (`Window.orderBy(...)` with no partition
-    key funnels the entire table through one task — a non-plan at
-    100 TB).
-
-    Two-phase rewrite, same shape as trainprep.global_cumsum:
-      1. range-partition on the sort key, rank within each partition
-         (parallel);
-      2. count rows per partition — a partitions-sized tiny table —
-         cumsum it alone, broadcast the offsets back;
-      3. rank = partition offset + within-partition rank.
-
-    The sort keys must include a unique tie-break column (house
-    determinism rule 3) so the total order — and therefore every
-    rank — is engine- and partitioning-independent. RangePartitioner
-    samples to pick boundaries; that only moves WHERE a row ranks,
-    never WHAT its rank is.
-
-    Phase 1 is PINNED with localCheckpoint before the offsets are
-    computed: the offsets subtree and the join-back subtree both
-    consume the range exchange, and without pinning AQE may coalesce
-    the two instances differently (or a caller's self-referencing
-    plan may re-evaluate the exchange), pairing offsets from one
-    partitioning with __pid from another — duplicate/gapped ranks.
-    The checkpoint is exactly the pass-1 materialization a two-pass
-    100 TB sort does anyway (write ranked runs, then publish).
-    """
-    from .trainprep import bucket_offsets
-
-    cols = [c if not isinstance(c, str) else F.col(c) for c in order_cols]
-    d = (
-        df.repartitionByRange(n_partitions, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    win = Window.partitionBy("__pid").orderBy(*cols)
-    d = d.withColumn("__within", F.row_number().over(win)).localCheckpoint()
-    offs = bucket_offsets(d, "__pid", F.lit(1))
-    return (
-        d.join(F.broadcast(offs), "__pid")
-        .withColumn(rank_col, (F.col("__off") + F.col("__within")).cast("long"))
-        .drop("__pid", "__within", "__off")
-    )
+    """Global ROW_NUMBER over a total order: global_running's sum of
+    1 per row. The sort keys must include a unique tie-break column
+    (house determinism rule 3)."""
+    d = global_running(df, order_cols, F.lit(1), "sum", rank_col, n_partitions)
+    return d.withColumn(rank_col, F.col(rank_col).cast("long"))
 
 
 def global_ntile(
@@ -277,37 +317,11 @@ def global_running_sum(
     out_col: str = "running",
     n_partitions: int = 32,
 ) -> DataFrame:
-    """INCLUSIVE global running sum of ``weight_col`` over an
-    arbitrary multi-column total order, without the single-partition
-    window — the multi-key generalization of trainprep.global_cumsum
-    (whose bucket arithmetic needs one integer order column). Same
-    two-phase shape as global_rank: range-partition on the order,
-    accumulate within each partition in parallel, cumsum the
-    partition totals alone (a partition-count-sized table), add the
-    offsets back. The order must carry a unique tie-break column
-    (house determinism rule 3). Phase 1 is pinned with
-    localCheckpoint for the same AQE-pairing reason as global_rank.
-    Used by the sweep-line keys (win_peak_concurrency): the running
-    live-count over (ts, delta, user) boundaries."""
-    from .trainprep import bucket_offsets
-
-    cols = [c if not isinstance(c, str) else F.col(c) for c in order_cols]
-    d = (
-        df.repartitionByRange(n_partitions, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    win = Window.partitionBy("__pid").orderBy(*cols).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    d = d.withColumn(
-        "__within", F.sum(weight_col).over(win)
-    ).localCheckpoint()
-    offs = bucket_offsets(d, "__pid", F.col(weight_col))
-    return (
-        d.join(F.broadcast(offs), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__within"))
-        .drop("__pid", "__within", "__off")
-    )
+    """INCLUSIVE global running sum of ``weight_col`` over a
+    multi-column total order (global_running with sum). Used by the
+    sweep-line keys (win_peak_concurrency): the running live-count
+    over (ts, delta, user) boundaries."""
+    return global_running(df, order_cols, weight_col, "sum", out_col, n_partitions)
 
 
 def global_running_min(
@@ -318,47 +332,8 @@ def global_running_min(
     n_partitions: int = 32,
 ) -> DataFrame:
     """INCLUSIVE global running MIN of ``value_col`` over a total
-    order, without the single-partition window — min is associative
-    and commutative, so the same two-phase __pid shape as
-    global_running_sum applies: range-partition on the order,
-    running min within each partition in parallel, then each
-    partition's prefix gets folded in via a broadcast offset table
-    holding the min of every PRECEDING partition (one row per
-    shuffle partition; F.least skips nulls, so the first partition —
-    whose offset is null — keeps its within-partition min).
-
-    A SUFFIX min (BH step-up's reverse running min) is this same
-    operator called with the order columns DESCENDING — which is
-    exactly how stats_bh_fdr consumes it. The order must carry a
-    unique tie-break column (house determinism rule 3); phase 1 is
-    pinned with localCheckpoint for the same AQE-pairing reason as
-    global_rank."""
-    cols = [c if not isinstance(c, str) else F.col(c) for c in order_cols]
-    d = (
-        df.repartitionByRange(n_partitions, *cols)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    win = Window.partitionBy("__pid").orderBy(*cols).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    d = d.withColumn(
-        "__within", F.min(value_col).over(win)
-    ).localCheckpoint()
-    offs = (
-        d.groupBy("__pid")
-        .agg(F.min(value_col).alias("__pmin"))
-        .withColumn(
-            "__offm",
-            F.min("__pmin").over(
-                Window.orderBy("__pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-        )
-        .select("__pid", "__offm")
-    )
-    return (
-        d.join(F.broadcast(offs), "__pid")
-        .withColumn(out_col, F.least(F.col("__offm"), F.col("__within")))
-        .drop("__pid", "__within", "__offm")
-    )
+    order (global_running with min). A SUFFIX min (BH step-up's
+    reverse running min) is this same operator called with the order
+    columns DESCENDING — which is exactly how stats_bh_fdr consumes
+    it."""
+    return global_running(df, order_cols, value_col, "min", out_col, n_partitions)

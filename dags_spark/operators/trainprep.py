@@ -19,18 +19,19 @@ Scale notes:
   text comparison;
 - sequence packing needs a GLOBAL running sum, which naively is a
   single-partition window (a non-plan at 100 TB). `global_cumsum`
-  does the standard two-phase rewrite: range-partition on the order
-  key, per-partition windows in parallel + a tiny offset table (one
-  row per shuffle partition — partition-count-grain, NOT data- or
-  domain-grain) that is cumsum'd alone and broadcast back. The
+  runs on scale.global_running's two-phase rewrite: range-partition
+  on the order key, per-partition windows in parallel + a tiny
+  offset table (one row per shuffle partition) broadcast back. The
   result is bit-identical to the single-window answer (integer sums
   are associative; the order key must be unique).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .scale import global_running
 
 __all__ = [
     "MD5_BYTE",
@@ -38,7 +39,6 @@ __all__ = [
     "hash_byte",
     "hash_word",
     "assign_split",
-    "bucket_offsets",
     "global_cumsum",
     "pack_sequences",
     "contaminated_docs",
@@ -108,30 +108,6 @@ def assign_split(
     return df.withColumn("split", expr)
 
 
-def bucket_offsets(d: DataFrame, key_col: str, weight: Column) -> DataFrame:
-    """The shared second phase of every two-phase global-order rewrite
-    (global_cumsum here, global_rank in operators/scale.py): one row
-    per bucket/partition, cumsum'd alone — the only unpartitioned
-    window, over an input the size of the bucket count — then
-    broadcast back onto the data. Returns (key_col, __off)."""
-    return (
-        d.groupBy(key_col)
-        .agg(F.sum(weight).alias("__tot"))
-        .withColumn(
-            "__off",
-            F.coalesce(
-                F.sum("__tot").over(
-                    Window.orderBy(key_col).rowsBetween(
-                        Window.unboundedPreceding, -1
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select(key_col, "__off")
-    )
-
-
 def global_cumsum(
     df: DataFrame,
     order_col: str,
@@ -140,45 +116,15 @@ def global_cumsum(
     out_col: str = "cum_before",
 ) -> DataFrame:
     """Exclusive global running sum of ``weight_col`` in ``order_col``
-    order (unique integer order key), via the two-phase __pid rewrite
-    — no single-partition window over the full table.
-
-    Round-9 soundness rewrite: the old shape bucketed on
-    ``order_col div bucket_width`` — VALUE-DOMAIN grain, which grows
-    with the corpus, so the unpartitioned offset window was only
-    "bounded" by a false premise. Now range-partition on the order
-    key and accumulate per ``spark_partition_id()`` — genuinely
-    partition-count-grain (same shape as scale.global_rank /
-    global_running_sum), so the only unpartitioned window runs over
-    ``n_partitions`` rows regardless of data volume.
+    order: scale.global_running's inclusive sum minus the row's own
+    weight — no single-partition window over the full table.
 
     ``order_col`` must be UNIQUE (house determinism rule 3): range
     partitioning may split equal keys across partitions, so ties
     would make the exclusive prefix row-order-dependent. Every caller
-    orders by a rank, a distinct-value grid, or a unique id.
-
-    Phase 1 is pinned with localCheckpoint before the offsets are
-    computed, for the same reason as scale.global_rank: the offsets
-    subtree and the join-back subtree both consume the range
-    exchange, and an AQE re-plan (or a caller's self-referencing
-    plan) evaluating the two instances differently would pair
-    offsets from one partitioning with rows from another."""
-    d = (
-        df.repartitionByRange(n_partitions, order_col)
-        .withColumn("__pid", F.spark_partition_id())
-    )
-    win = (
-        Window.partitionBy("__pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    d = d.withColumn("__within", F.sum(weight_col).over(win)).localCheckpoint()
-    offs = bucket_offsets(d, "__pid", F.col(weight_col))
-    return (
-        d.join(F.broadcast(offs), "__pid")
-        .withColumn(out_col, F.col("__off") + F.col("__within") - F.col(weight_col))
-        .drop("__pid", "__within", "__off")
-    )
+    orders by a rank, a distinct-value grid, or a unique id."""
+    d = global_running(df, [order_col], weight_col, "sum", out_col, n_partitions)
+    return d.withColumn(out_col, F.col(out_col) - F.col(weight_col))
 
 
 def pack_sequences(

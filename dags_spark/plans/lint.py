@@ -139,9 +139,9 @@ def _int_args(arg_line: str) -> list[int]:
 #                    unproven.
 #   literal modulus  pmod(x, K) / (x % K) / ntile(K) with a literal K.
 #   partition id     spark_partition_id(), and the engine's reserved
-#                    __pid attribute (operators/scale.py /
-#                    operators/trainprep.py two-pass rank-offset
-#                    machinery). These survive a localCheckpoint as
+#                    __pid attribute (operators/scale.py:range_split,
+#                    phase 1 of every two-pass rank-offset
+#                    rewrite). These survive a localCheckpoint as
 #                    ExistingRDD columns whose defining expression is
 #                    gone from the plan, so the bound rests on the
 #                    reserved-name CONTRACT: only the two-pass rewrite
@@ -182,7 +182,7 @@ _CAL_FUNC = {
 # old trainprep.global_cumsum defined it as value div bucket_width —
 # value-DOMAIN grain, which grows with the corpus — so bounding it at
 # the partition cap was a false premise. global_cumsum now runs on
-# the same __pid two-phase shape as scale.global_rank.
+# scale.range_split's __pid like every two-phase rewrite.
 _RESERVED_PARTITION_ATTRS = ("__pid",)
 
 _ATTR_RE = None  # compiled lazily

@@ -1033,9 +1033,9 @@ def iter_reachability_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     most |nodes| — no driver-side iteration state at all, one job.
     The oracle reaches the same fixpoint with a recursive CTE;
     min-depth semantics make revisit rows harmless on both sides.
-    At 100 TB-scale graphs the same code runs with localCheckpoint
-    per level (as dedup_connected_components does for its unbounded
-    variant); bounded-k unrolling is the cheaper plan when k is
+    An unbounded depth needs driver-side rounds, each pinned with
+    localCheckpoint (dedup_connected_components' large-star/small-star
+    operator); bounded-k unrolling is the cheaper plan when k is
     known."""
     cust = table(spark, sf_dir, "customer")
     nn = cust.agg(F.count(F.lit(1)).alias("n"))
@@ -5807,9 +5807,11 @@ def dq_id_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (one (min,max) row per partition — partition-count-grain), whose
     adjacent-span gaps are the lag gaps the per-partition pass
     cannot see. Identical algebra to the former global-sort LAG at
-    any scale; pinned with localCheckpoint so the boundary subtree
-    and the within-partition subtree consume the SAME partitioning
-    (the global_rank AQE-pairing rule). Exact integers throughout."""
+    any scale; phase 1 is scale.range_split, so the boundary subtree
+    and the within-partition subtree consume the SAME pinned
+    partitioning. Exact integers throughout."""
+    from ..operators.scale import range_split
+
     ev = table(spark, sf_dir, "events")
     s = ev.agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -5817,12 +5819,7 @@ def dq_id_density_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("event_id").cast("bigint").alias("hi"),
         F.countDistinct("event_id").cast("bigint").alias("n_distinct"),
     )
-    ids = (
-        ev.select("event_id")
-        .repartitionByRange(32, "event_id")
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
+    ids = range_split(ev.select("event_id"), ["event_id"], 32)
     w_in = Window.partitionBy("__pid").orderBy("event_id")
     inner_gaps = ids.select(
         (F.col("event_id") - F.lag("event_id").over(w_in)).alias("gap")

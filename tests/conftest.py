@@ -26,6 +26,26 @@ def run_key(spark, key):
     return all_specs()[key].fn(spark, SF_DIR).toPandas()
 
 
+def union_find_components(edges) -> dict:
+    """Reference connected components of an undirected edge list:
+    {node: min node of its component}, by union-find with path
+    halving. Self-loops make their node a singleton component."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in list(parent)}
+
+
 @contextmanager
 def count_jobs(spark):
     """Count the Spark jobs the block launches from this thread:

@@ -12,6 +12,8 @@ from dags_spark.io import table
 from dags_spark.operators.asof import asof_join
 from dags_spark.operators.dedup import exact_dedup, minhash_near_dup_pairs, shingles
 
+from .conftest import union_find_components
+
 
 def _ts(s: str) -> dt.datetime:
     return dt.datetime.fromisoformat(s)
@@ -116,11 +118,12 @@ def test_minhash_recall_vs_exact_jaccard(spark, duck, sf_dir):
 
 def test_connected_components_fixpoint(spark):
     """Hand graph: {1-2, 2-3} one component, {10-11} another, chain
-    {20-21, 21-22, 22-23} a third (diameter > 1 forces iteration)."""
+    {20-21, 21-22, 22-23} a third (diameter > 1 forces iteration),
+    and node 30 with only a self-loop, which is its own component."""
     from dags_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23)],
+        [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22), (22, 23), (30, 30)],
         "id_a BIGINT, id_b BIGINT",
     )
     got = {
@@ -130,6 +133,7 @@ def test_connected_components_fixpoint(spark):
         (1, 1), (2, 1), (3, 1),
         (10, 10), (11, 10),
         (20, 20), (21, 20), (22, 20), (23, 20),
+        (30, 30),
     }
 
 
@@ -898,41 +902,42 @@ def test_blocked_pairs_tiled_topk_matches_fold_path(spark):
 
 
 def test_connected_components_star_matches_propagation(spark):
-    """Large-star/small-star CC must reach the same (id -> min id)
-    fixpoint as min-label propagation on (a) a seeded random graph
+    """Large-star/small-star CC must reach the (id -> min id)
+    fixpoint of a union-find reference on (a) a seeded random graph
     with several components and (b) a 400-node PATH — the
     adversarial-diameter case star contraction exists for (label
-    propagation would need 400 rounds there; the star variant is
-    capped at 30 and must still converge)."""
-    from dags_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    propagation would need 400 rounds there; the star rounds are
+    capped at 30 and must still converge). With the cap at 2 rounds
+    the path has no fixpoint, and the operator must raise rather
+    than return a partial labelling."""
+    from dags_spark.operators.dedup import connected_components
 
     def comp_map(df):
         return {r.id: r.component for r in df.collect()}
 
     # (a) deterministic pseudo-random graph: 3 disjoint blobs + loners
     edges = []
-    for blob, base in ((0, 0), (1, 1000), (2, 2000)):
+    for base in (0, 1000, 2000):
         for i in range(60):
             a = base + (i * 17) % 60
             b = base + (i * 31 + 7) % 60
             if a != b:
                 edges.append((a, b))
-        del blob
     rand_df = spark.createDataFrame(edges, "id_a long, id_b long")
-    star = comp_map(connected_components_star(rand_df))
-    prop = comp_map(connected_components(rand_df))
-    assert star == prop and star, "random-graph fixpoints diverged"
+    star = comp_map(connected_components(rand_df))
+    assert star == union_find_components(edges) and star, (
+        "random-graph fixpoint diverged from union-find"
+    )
 
     # (b) the long path: 0-1-2-...-400
     path_df = spark.createDataFrame(
         [(i, i + 1) for i in range(400)], "id_a long, id_b long"
     )
-    star_p = comp_map(connected_components_star(path_df))
+    star_p = comp_map(connected_components(path_df))
     assert set(star_p.values()) == {0}, "path did not contract to root 0"
     assert len(star_p) == 401
+    with pytest.raises(RuntimeError, match="no fixpoint after 2 rounds"):
+        connected_components(path_df, max_iter=2)
 
 
 def test_blocked_pairs_per_query_topk_lossless_and_bounded(spark):

@@ -14,6 +14,8 @@ from hypothesis import strategies as st
 from dags_spark.operators.asof import asof_join
 from dags_spark.operators.rangejoin import binned_band_join
 
+from .conftest import union_find_components
+
 _SLOW = settings(
     max_examples=12,
     deadline=None,
@@ -137,27 +139,7 @@ def test_connected_components_matches_union_find(spark, edges):
         r["id"]: r["component"]
         for r in connected_components(pairs).collect()
     }
-
-    # reference union-find with path compression
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    nodes = {n for e in edges for n in e}
-    expect = {}
-    for n in nodes:
-        root = find(n)
-        expect[n] = min(m for m in nodes if find(m) == root)
-    assert got == expect
+    assert got == union_find_components(edges)
 
 
 @given(
