@@ -459,7 +459,8 @@ def connected_components(
     every smaller neighbor and u itself attach to m. Each step is one
     groupBy + join (distributed, no driver graph), lineage truncated
     per round with localCheckpoint; the fixpoint is a star forest
-    rooted at each component's minimum id. Raises if ``max_iter``
+    rooted at each component's minimum id, recognized in the round
+    that produces it. Raises if ``max_iter``
     rounds pass without a fixpoint rather than return a partial
     labelling.
 
@@ -503,14 +504,21 @@ def connected_components(
             .distinct()
         )
 
-    def checksum(e: DataFrame) -> tuple:
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # decimal sum: a long sum of 2^63-scale hashes overflows
-            # under ANSI arithmetic
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
+    def is_star_forest(e: DataFrame) -> bool:
+        """Every edge's u has exactly one v, and no v is any edge's u:
+        each component is one star rooted at its minimum, which both
+        contractions map to itself. One job, in the round that built
+        it. ("No v is a u" alone is not enough: a round can leave a
+        node with two roots, e.g. {(3, 1), (3, 2), (4, 2), (6, 1)}.)"""
+        deg = (
+            e.select(F.col("u").alias("n"), F.lit(1).alias("out"), F.lit(0).alias("in_"))
+            .union(e.select("v", F.lit(0), F.lit(1)))
+            .groupBy("n")
+            .agg(F.sum("out").alias("out"), F.max("in_").alias("in_"))
+        )
+        return deg.filter(
+            (F.col("out") > 1) | ((F.col("out") > 0) & (F.col("in_") > 0))
+        ).isEmpty()
 
     ends = (
         pairs.select(
@@ -521,13 +529,10 @@ def connected_components(
         .localCheckpoint()
     )
     edges = ends.filter(F.col("u") != F.col("v"))
-    prev = None
     for _ in range(max_iter):
         edges = small_star(large_star(edges)).localCheckpoint()
-        cur = checksum(edges)
-        if cur == prev:
+        if is_star_forest(edges):
             break
-        prev = cur
     else:
         raise RuntimeError(
             f"connected_components: no fixpoint after {max_iter} rounds"

@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -53,7 +53,13 @@ def md5_sample(df: DataFrame, id_col: str, cols: list[str], n: int) -> DataFrame
     )
 
 
-def adaptive_chunks(df: DataFrame, max_block_rows: int = 8192) -> int:
+# Largest group the within-block pair kernel runs by default (the
+# blocked_pairs hot-block guard); ann_lsh_topk answers exactly at or
+# below it.
+MAX_BLOCK_ROWS = 8192
+
+
+def adaptive_chunks(df: DataFrame, max_block_rows: int = MAX_BLOCK_ROWS) -> int:
     """Scale-gated chunk count for ``blocked_pairs(n_chunks=...)``.
 
     Round 10 derived ``n_chunks = isqrt(defaultParallelism)``
@@ -215,7 +221,7 @@ def blocked_pairs(
     block_col: str = "label",
     metric: str = "cosine",
     symmetric: bool = False,
-    max_block_rows: int | None = 8192,
+    max_block_rows: int | None = MAX_BLOCK_ROWS,
     threshold: float | None = None,
     per_block_topk: int | None = None,
     per_query_topk: int | None = None,
@@ -409,6 +415,30 @@ def blocked_pairs(
     return pairs.select("id_a", "id_b", block_col, val.alias(col))
 
 
+def rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Per-query top-k of (id_a, id_b, sim) candidates, ties broken by
+    the smaller id_b: columns query_id, neighbor_id, sim, rnk."""
+    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
+    return (
+        cand.withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"), "sim", "rnk")
+    )
+
+
+def exact_topk(
+    emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding", k: int = 10
+) -> DataFrame:
+    """Exact per-query cosine top-k over the whole corpus, run as ONE
+    ``blocked_pairs(symmetric=True, per_query_topk=k)`` block, so the
+    corpus must fit the kernel's ``MAX_BLOCK_ROWS`` cap. Same columns
+    as ``ann_lsh_topk``; ``sim`` is the sequential fold the JVM path
+    computes, rounded to 6 dp."""
+    one = emb.select(id_col, vec_col, F.lit(0).alias("__blk"))
+    pairs = blocked_pairs(one, id_col, vec_col, "__blk", symmetric=True, per_query_topk=k)
+    return rank_topk(pairs, k)
+
+
 def ann_lsh_topk(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -423,6 +453,26 @@ def ann_lsh_topk(
     """Approximate k-NN via random-hyperplane (sign-LSH) bucketing —
     the scale path when label blocks (or any exact partitioner) are
     unavailable.
+
+    Exact below the one-block cap: with ``n_bits=None`` the operator
+    counts the corpus anyway, and when it holds at most
+    ``MAX_BLOCK_ROWS`` vectors it returns ``exact_topk`` instead of
+    building the index — an exact answer is a valid ANN answer
+    (recall 1.0), same columns, ``sim`` the same 6-dp fold. At these
+    sizes the sign-LSH candidates cover most pairs and are verified
+    with JVM array dot products, so the one GEMM block wins. Measured
+    warm, best of 3, 4 vCPUs, generator seed 7:
+
+    ======== ======== ========== ===============
+    vectors  LSH      exact      LSH recall@10
+    ======== ======== ========== ===============
+    500      2.21 s   0.33 s     0.987
+    2000     8.39 s   0.45 s     0.959
+    5000     15.85 s  0.98 s     0.791
+    8000     40.81 s  1.82 s     0.812
+    ======== ======== ========== ===============
+
+    Above the cap, or whenever ``n_bits`` is passed, the LSH body runs:
 
     1. ``n_tables`` independent ``n_bits``-bit sign-LSH codes per
        vector, computed in ONE Arrow-batched pandas UDF (a numpy
@@ -448,7 +498,8 @@ def ann_lsh_topk(
     the 20x near-dup stress tier). ``n_bits=None`` (default)
     therefore self-sizes to ceil(log2(n / 16)) clamped to [6, 16] —
     ~16 vectors per bucket at any corpus size, the FAISS-style
-    heuristic — at the cost of one metadata-cheap count() job.
+    heuristic — at the cost of one metadata-cheap count() job (the
+    same count that picks the exact path).
 
     Hot-bucket ceiling (``max_bucket``, the LSH twin of the minhash
     ceiling in operators/dedup.py): a (table, bucket) cell holding a
@@ -469,6 +520,8 @@ def ann_lsh_topk(
 
     if n_bits is None:
         n_vec = emb.count()
+        if n_vec <= MAX_BLOCK_ROWS:
+            return exact_topk(emb, id_col, vec_col, k)
         n_bits = min(16, max(6, _math.ceil(_math.log2(max(n_vec, 2) / 16))))
 
     rng = _random.Random(42)
@@ -545,14 +598,7 @@ def ann_lsh_topk(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"), "sim", "rnk")
-    )
+    return rank_topk(cand, k)
 
 
 # DuckDB oracle fragments mirroring the exact same arithmetic.
@@ -835,17 +881,7 @@ def ann_ivf_topk(
         cell_kernel, schema="id_a BIGINT, id_b BIGINT, sim DOUBLE"
     )
 
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            F.col("id_a").alias("query_id"), F.col("id_b").alias("neighbor_id"),
-            "sim", "rnk",
-        )
-    )
+    return rank_topk(cand, k)
 
 
 def _train_pq_codebooks(

@@ -26,6 +26,7 @@ from ..operators.similarity import (
     adaptive_chunks,
     ann_lsh_topk,
     blocked_pairs,
+    rank_topk,
 )
 from ..registry import register
 
@@ -154,17 +155,7 @@ def sim_knn_per_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = blocked_pairs(
         table(spark, sf_dir, "embeddings"), symmetric=True, per_query_topk=10
     )
-    w = Window.partitionBy("id_a").orderBy(F.col("sim").desc(), F.col("id_b"))
-    return (
-        pairs.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 10)
-        .select(
-            F.col("id_a").alias("query_id"),
-            F.col("id_b").alias("neighbor_id"),
-            "sim",
-            "rnk",
-        )
-    )
+    return rank_topk(pairs, 10)
 
 
 @register(
@@ -421,10 +412,12 @@ def multimodal_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("sim_ann_lsh_topk", oracle=None, check="rows", prop_tests=("tests/test_textops.py::test_ann_lsh_recall_vs_exact", "tests/test_textops.py::test_ann_keys_deterministic_across_runs"))
 def sim_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate kNN via random-hyperplane LSH bucketing (16 tables x
-    8 bits): candidate pairs share a bucket (equi-join, ~linear), exact
-    cosine re-rank, top-10 per query. Approximate by design -> rows
-    check; the recall property test compares against exact kNN."""
+    """Top-10 cosine kNN per vector through ``ann_lsh_topk`` with a
+    self-sized ``n_bits``: exact (one ``blocked_pairs`` block) while
+    the corpus fits ``MAX_BLOCK_ROWS``, else random-hyperplane LSH
+    (16 tables, ~16 vectors per bucket) with an exact cosine re-rank.
+    Approximate by design -> rows check; the recall property test
+    compares the LSH body against exact kNN."""
     return ann_lsh_topk(table(spark, sf_dir, "embeddings"), k=10)
 
 

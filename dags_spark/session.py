@@ -92,6 +92,12 @@ def get_spark(app_name: str = "dags_spark") -> SparkSession:
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Compiled whole-stage classes are cached per generated source;
+        # at the default 100 entries the 7 llm_curation keys recompiled
+        # 140 classes every warm pass. The three perfbench workloads
+        # together need 309 distinct classes; 1000 holds them with room
+        # to spare. Static: it cannot be set in tune().
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.extraJavaOptions", "-Djava.net.preferIPv4Stack=true")
     )
     spark = builder.getOrCreate()

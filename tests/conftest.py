@@ -64,6 +64,32 @@ def count_jobs(spark):
         jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def codegen_compiles(spark) -> int:
+    """Janino compiles of generated classes since the JVM started."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def metaspace_mb(spark) -> float:
+    """Used JVM Metaspace, where loaded generated classes live."""
+    pools = spark._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans()
+    return next(p.getUsage().getUsed() for p in pools if p.getName() == "Metaspace") / 2**20
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Report the test session's codegen cost, the memory side of the
+    codegen cache size set in get_spark()."""
+    from pyspark.sql import SparkSession
+
+    s = SparkSession.getActiveSession()
+    if s is not None:
+        size = s.conf.get("spark.sql.codegen.cache.maxEntries")
+        terminalreporter.write_line(
+            f"codegen: {codegen_compiles(s)} compiles, cache maxEntries {size},"
+            f" Metaspace {metaspace_mb(s):.0f} MB"
+        )
+
+
 def pytest_configure(config):
     config.addinivalue_line("markers", "slow: long-running (LSH/property) tests")
 

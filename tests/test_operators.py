@@ -119,7 +119,11 @@ def test_minhash_recall_vs_exact_jaccard(spark, duck, sf_dir):
 def test_connected_components_fixpoint(spark):
     """Hand graph: {1-2, 2-3} one component, {10-11} another, chain
     {20-21, 21-22, 22-23} a third (diameter > 1 forces iteration),
-    and node 30 with only a self-loop, which is its own component."""
+    and node 30 with only a self-loop, which is its own component.
+    Then {41-46, 43-42, 44-46, 43-44} alone: its first round leaves
+    node 43 under two roots while no root is a child, so a fixpoint
+    test that checks only the latter stops there and mislabels 42,
+    43 and 44."""
     from dags_spark.operators.dedup import connected_components
 
     pairs = spark.createDataFrame(
@@ -135,6 +139,11 @@ def test_connected_components_fixpoint(spark):
         (20, 20), (21, 20), (22, 20), (23, 20),
         (30, 30),
     }
+    two_roots = spark.createDataFrame(
+        [(41, 46), (43, 42), (44, 46), (43, 44)], "id_a BIGINT, id_b BIGINT"
+    )
+    got = {(r.id, r.component) for r in connected_components(two_roots).collect()}
+    assert got == {(n, 41) for n in (41, 42, 43, 44, 46)}
 
 
 def test_asof_forward_picks_earliest_at_or_after(spark):
